@@ -1,27 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 5 reps → the committed per-query medians are reproducible ±5% even on
     // a noisy box (single runs swing ±2×, VERDICT r5)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     // optional comma-separated query-name filter for isolated profiling
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // testdata parquet carries TIMESTAMP(NANOS) — read as raw longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.lake.GraftLakeCatalog")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 4)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // Warm every query SHAPE on the tiny sf first: whole-stage codegen
     // caches by generated source (schema-dependent, size-independent), so
     // this precompiles the exact classes the timed run reuses — the timed

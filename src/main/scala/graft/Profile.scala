@@ -1,10 +1,9 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: run one query and attribute its wall time to
   * Spark jobs (with stage/task counts) vs driver-side gaps (planning, log
-  * folds, footer reads). Same session config as [[Bench]]. Not a
+  * folds, footer reads). Same [[GraftSession]] as [[Bench]]. Not a
   * driver-contract surface.
   *
   * Usage: runMain graft.Profile <sfDir> <name> [reps]
@@ -14,18 +13,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.lake.GraftLakeCatalog")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 4)
 
     case class JobRec(id: Int, start: Long, var end: Long = -1L,
       var stages: Int = 0, var tasks: Int = 0, desc: String = "")

@@ -2,7 +2,7 @@ package graft
 
 import graft.apps.DataGen
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,13 +50,7 @@ object SkewBench {
     val nLsh = sys.env.getOrElse("SPARK_GRAFT_SKEW_N", "200000").toLong
     val nExact = sys.env.getOrElse("SPARK_GRAFT_SKEW_N_EXACT", "2000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 8)
 
     // materialize all corpora to parquet so every timed op pays the same
     // scan and none of the generation

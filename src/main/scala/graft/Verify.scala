@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // testdata parquet carries TIMESTAMP(NANOS) — read as raw longs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // lake SQL DML (LakeDmlRule) is a resolution rule — session-build only
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      // lake ALTER TABLE / MERGE INTO / time travel need the v2 catalog
-      // face (delegating: non-lake tables untouched)
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.lake.GraftLakeCatalog")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // comma-separated filter for fast single-query iteration (same contract
     // as SPARK_GRAFT_BENCH_ONLY); absent = dump everything

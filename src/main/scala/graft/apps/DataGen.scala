@@ -100,10 +100,7 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000L)
     val out = args.lift(1).getOrElse("target/datagen")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.app()
     try mockRecords(spark, n).write.mode("overwrite").parquet(out)
     finally spark.stop()
   }
@@ -116,9 +113,7 @@ object Tap {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("target/datagen")
     val n = args.lift(1).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.app()
     try {
       val df = spark.read.parquet(path)
       df.show(n, truncate = false)

@@ -60,7 +60,6 @@ object GraftConfig {
       timerCleanup = bool("timer-cleanup", MediationApp.Config().timerCleanup),
       toxicWindow = str("toxic-window", MediationApp.Config().toxicWindow),
       watermarkDelay = str("watermark-delay", MediationApp.Config().watermarkDelay),
-      d3 = str("d3", MediationApp.Config().d3),
       source = str("source", MediationApp.Config().source),
       kafkaBootstrap = str("kafka-bootstrap", MediationApp.Config().kafkaBootstrap),
       kafkaTopic = str("kafka-topic", MediationApp.Config().kafkaTopic),

@@ -63,13 +63,7 @@ object LakeMergeBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_LAKE_N", "2000000").toLong
     val frac = sys.env.getOrElse("SPARK_GRAFT_MERGE_FRAC", "0.01").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(defaultCpus = 32)
     val (rows, secs, victims, files) = run(spark, n, frac)
     println(f"""{"metric":"lake_merge","table_rows":$rows,""" +
       f""""merge_seconds":$secs%.2f,"table_rows_per_sec":${rows / secs}%.0f,""" +

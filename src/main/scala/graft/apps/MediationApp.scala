@@ -1,7 +1,7 @@
 package graft.apps
 
 import graft.model.{MyEventRecord, SendResult}
-import graft.streaming.{AsyncEnrich, Marked, StatefulTtlDedup, StatefulTtlDedupTws, WindowedSink}
+import graft.streaming.{AsyncEnrich, Marked, StatefulTtlDedupTws, WindowedSink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
@@ -32,16 +32,12 @@ object MediationApp {
 
   final case class Config(
       ttlMillis: Long = 120000L, // local default ttl-time=120 s (application.conf:20)
-      timerCleanup: Boolean = true, // state-store GC timer / Tws timer-clear
+      timerCleanup: Boolean = true, // Tws per-key timer-clear
       toxicWindow: String = "30 seconds", // MediationService.scala:129
       watermarkDelay: String = "0 seconds", // allowedLateness=0 (W5)
       enrich: AsyncEnrich.Config = AsyncEnrich.Config(),
       // per-element firing (W3) by default; AvailableNow = bounded replay
       trigger: Trigger = Trigger.ProcessingTime(0L),
-      // D3 engine: "tws" (transformWithState + native TTL + timer-clear,
-      // RocksDB state store — the preferred §2.9 mapping) or "fmgws"
-      // (flatMapGroupsWithState twin, any provider)
-      d3: String = "tws",
       // bus source: "file" (dir-tail stand-in), "kafka" (needs the
       // spark-sql-kafka connector jar at runtime; see sources/Bus)
       source: String = "file",
@@ -131,22 +127,17 @@ object MediationApp {
           .as[MyEventRecord]
       }
 
-    // D3: transformWithState (native TTL + timer-clear on RocksDB) is the
-    // default engine; the flatMapGroupsWithState twin stays selectable for
-    // providers without Tws support. NOTE Tws with a TTL runs
-    // TimeMode.ProcessingTime, where Spark re-triggers no-data batches —
-    // bounded drains (AvailableNow) and sink-polling tests are the
-    // compatible harnesses (see StatefulTtlDedupTws).
-    val deduped =
-      if (cfg.d3 == "tws") {
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        // Tws needs a multi-column-family store; getOption surfaces the
-        // HDFS-backed DEFAULT, so test for RocksDB rather than for absence
-        if (!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
-          spark.conf.set(providerKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        StatefulTtlDedupTws(novel, cfg.ttlMillis, timerClear = cfg.timerCleanup)
-      } else StatefulTtlDedup(novel, cfg.ttlMillis, cfg.timerCleanup)
+    // D3: transformWithState (native TTL + timer-clear on RocksDB). NOTE
+    // with a TTL it runs TimeMode.ProcessingTime, where Spark re-triggers
+    // no-data batches — bounded drains (AvailableNow) and sink-polling
+    // tests are the compatible harnesses (see StatefulTtlDedupTws).
+    // Tws needs a multi-column-family store; getOption surfaces the
+    // HDFS-backed DEFAULT, so test for RocksDB rather than for absence
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    if (!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
+      spark.conf.set(providerKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val deduped = StatefulTtlDedupTws(novel, cfg.ttlMillis, timerClear = cfg.timerCleanup)
 
     // K5 log-effect taps → Spark-native observable metrics: per-batch row
     // counts surface through QueryProgressEvent.observedMetrics instead of
@@ -206,10 +197,7 @@ object MediationApp {
       "usage: MediationApp <eventsDir> <outPath> <toxicPath> <checkpoint> [histPath...]")
     val Array(eventsDir, outPath, toxicPath, ckpt) = args.take(4)
     val hist = args.drop(4).toSeq
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.app()
     val client: () => AsyncEnrich.NotificationClient =
       sys.env.get("GRAFT_ENDPOINT") match {
         case Some(ep) => () => new AsyncEnrich.JdkHttpClient(java.net.URI.create(ep))

@@ -60,7 +60,7 @@ object Dedup {
    * `SENT_OR_DUPLICATED` (the rest) — mirroring the stateful TTL dedup's
    * one-output-per-input behavior
    * (mediation/http/StateAsyncParDoWithHttpHandler.scala:105-131; the
-   * streaming twin lives in [[graft.streaming.StatefulTtlDedup]]).
+   * streaming twin lives in [[graft.streaming.StatefulTtlDedupTws]]).
    */
   /**
    * Same narrow-winner shape as [[exactDedup]] (NOT a `row_number` window):

@@ -80,7 +80,7 @@ private[lake] object DvCache {
  * (Delta's shape): a task's closure carries only its own split's
  * sidecar paths and the plan carries none — this expression is now a
  * CONSTANT-size reference object, whatever the table's DV census.
- * Measured ([[LakeDvMapBench]], r13): plan expression 892 B and
+ * Measured in r13: plan expression 892 B and
  * per-32-file-task payload 5.1 KB, both INVARIANT from 10⁴ to 10⁶ DV
  * files; the r12 plan-level map at the same census was 1.3 MB → 126 MB
  * (2.4 s to serialize) — that ceiling is retired. The driver's O(F)

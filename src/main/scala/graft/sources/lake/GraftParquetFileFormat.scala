@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
  * ITS OWN split's descriptors, and the plan carries none — versus the
  * previous plan-level map in the [[DvDeleted]] reference object, which
  * serialized the WHOLE table's descriptors into the one taskBinary
- * broadcast per stage (measured 126 MB / ~2.4 s at 10⁶ DV files,
- * [[LakeDvMapBench]]). With per-file descriptors the ceiling is gone:
+ * broadcast per stage (measured in r12: 126 MB / ~2.4 s at 10⁶ DV
+ * files). With per-file descriptors the ceiling is gone:
  * descriptor bytes scale with files-per-task, invariant in table size.
  *
  * 2. Column mapping for renamed id-less fields

@@ -4,10 +4,30 @@ import graft.model.MyEventRecord
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
+/** A record tagged with its dedup outcome — D3's one-output-per-input
+  * contract (every arrival yields a row, SENT or SENT_OR_DUPLICATED;
+  * mediation/http/StateAsyncParDoWithHttpHandler.scala:105-131 and the
+  * multiset assertion in MediationServiceSpec.scala:73-81).
+  */
+final case class Marked(key: String, record: MyEventRecord, status: String)
+
+object Marked {
+  val Sent = "SENT"
+  val Dup = "SENT_OR_DUPLICATED"
+}
+
 /**
- * D3 on the Spark 4 `transformWithState` API (SURVEY §2.9's preferred
- * mapping; [[StatefulTtlDedup]] is the `flatMapGroupsWithState` twin that
- * works on any state store provider). Here the per-key TTL is native:
+ * D3 — stateful TTL dedup (SURVEY §2.5/§2.9): per idempotent key, the
+ * first arrival within the TTL window is SENT; every later same-key
+ * arrival while the key is live in state emits SENT_OR_DUPLICATED.
+ * INITIAL_LOAD-tagged records load state WITHOUT a send (bootstrap,
+ * StateAsyncParDoWithHttpHandler.scala:133-145); once expired the next
+ * arrival is SENT again (StateBaseAsyncDoFn.java:156-166). One output per
+ * INPUT, not per key (SURVEY §7.3 hard-part #1), and state is
+ * hash-partitioned on the key, like Beam's keyed state at any scale.
+ *
+ * Built on the Spark 4 `transformWithState` API (SURVEY §2.9's preferred
+ * mapping). The per-key TTL is native:
  * `ValueState` + `TTLConfig` — the state store expires the entry itself,
  * so there is no timer to manage, no no-data-batch dependence, and expiry
  * behaves identically under both time semantics. Requires the RocksDB

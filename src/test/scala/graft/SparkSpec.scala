@@ -6,19 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one per JVM, lazy). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // lake SQL DML (LakeDmlRule) is a resolution rule — session-build only
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      // lake ALTER TABLE / MERGE INTO / time travel need the v2 catalog
-      // face (delegating: non-lake tables untouched)
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.lake.GraftLakeCatalog")
       // the CI box freezes for tens of seconds under load; with the 10s
       // defaults the local-mode executor declares the driver dead and
       // System.exit(56)s the whole suite JVM mid-run

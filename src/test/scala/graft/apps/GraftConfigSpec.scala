@@ -10,7 +10,6 @@ class GraftConfigSpec extends AnyFunSuite {
     val p = new Properties()
     p.setProperty("dev.mediation.ttl-millis", "5000")
     p.setProperty("dev.mediation.max-retries", "7")
-    p.setProperty("dev.mediation.d3", "fmgws")
     p.setProperty("dev.mediation.source", "kafka")
     p.setProperty("dev.mediation.kafka-bootstrap", "broker:9092")
     p.setProperty("dev.mediation.kafka-topic", "bers")
@@ -19,7 +18,6 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(dev.ttlMillis == 5000L)
     assert(dev.enrich.maxRetries == 7)
     assert(dev.toxicWindow == "30 seconds") // untouched default
-    assert(dev.d3 == "fmgws")
     assert(dev.source == "kafka")
     assert(dev.kafkaBootstrap == "broker:9092")
     assert(dev.kafkaTopic == "bers")

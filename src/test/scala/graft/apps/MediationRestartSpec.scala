@@ -24,17 +24,14 @@ import org.apache.spark.sql.streaming.Trigger
  */
 class MediationRestartSpec extends SparkSpec {
 
-  // both D3 engines: transformWithState (RocksDB state) and the
-  // flatMapGroupsWithState twin — restart semantics must hold for either
-  for (d3 <- Seq("tws", "fmgws"))
-  test(s"stop mid-drain, publish more, restart ($d3): every record exactly once") {
+  test("stop mid-drain, publish more, restart (tws): every record exactly once") {
     val base = Files.createTempDirectory("medrestart").toString
     val (n1, n2) = (8000L, 4000L)
     Bus.logBusAppend(DataGen.mockRecords(spark, n1), s"$base/bus", "events")
     val cfg = MediationApp.Config(
-      ttlMillis = 600000L, timerCleanup = false, d3 = d3,
+      ttlMillis = 600000L, timerCleanup = false,
       trigger = Trigger.AvailableNow(),
-      enrich = AsyncEnrich.Config(clientId = s"med-restart-$d3",
+      enrich = AsyncEnrich.Config(clientId = "med-restart",
         maxConcurrency = 64, ratePerSec = 1000000, burst = 1000000,
         backoffMillis = 1L))
     def startOnce() = MediationApp.start(spark,

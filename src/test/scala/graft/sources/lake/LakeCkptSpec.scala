@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Streaming checkpoint codec: one generator/parser pass, O(1) heap —
  * measured 13×/3.3× faster than the tree form at 10⁶ files
- * (LakeCkptBench: 1.9 s write / 4.2 s parse / 323 MB). The JSON SHAPE is
+ * (r11: 1.9 s write / 4.2 s parse / 323 MB). The JSON SHAPE is
  * unchanged, so checkpoints written by earlier versions (pretty-printed
  * tree output) must keep parsing, and field order must not matter.
  */

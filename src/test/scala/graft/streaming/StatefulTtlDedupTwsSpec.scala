@@ -5,33 +5,50 @@ import graft.model.{MockData, MyEventRecord}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-/** D3 via transformWithState + native state TTL (RocksDB provider). */
+/** D3 via transformWithState + native state TTL (RocksDB provider):
+  * replays the reference's e2e scenario — 1 unique + 2 duplicate records →
+  * 1 SENT + 2 SENT_OR_DUPLICATED, all three inputs produce an output row
+  * (test/scala/mediation/MediationServiceSpec.scala:45-83) — plus the TTL
+  * and bootstrap contracts.
+  */
 class StatefulTtlDedupTwsSpec extends SparkSpec {
   import spark.implicits._
 
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-  private def runStream(name: String,
-      batches: Seq[Seq[MyEventRecord]], ttlMillis: Long): Seq[Marked] = {
+  /** Feeds `batches` one micro-batch each, sleeping `pauseMs` of wall
+    * clock between them (TTLConfig uses real processing time).
+    *
+    * With a TTL the query runs TimeMode.ProcessingTime, where Spark keeps
+    * re-triggering no-data batches — processAllAvailable() never returns,
+    * and stop() kills whichever batch is mid-write (pages of benign
+    * abort-commit noise). TTLConfig expiry is evaluated on the state READ
+    * path, not by those batches, so TTL'd runs disable them: nothing is
+    * lost and the run is deterministic and quiet. */
+  private def runStream(name: String, batches: Seq[Seq[MyEventRecord]],
+      ttlMillis: Long, pauseMs: Long = 0L): Seq[Marked] = {
     implicit val sq = spark.sqlContext
-    val prev = spark.conf.getOption(ProviderKey)
-    spark.conf.set(ProviderKey, RocksDb)
+    val settings = Seq(ProviderKey -> RocksDb) ++
+      (if (ttlMillis > 0) Seq(NoDataKey -> "false") else Nil)
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val input = MemoryStream[MyEventRecord]
       val query = StatefulTtlDedupTws(input.toDS(), ttlMillis)
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append).start()
       try {
-        batches.foreach { b => input.addData(b); query.processAllAvailable() }
+        batches.zipWithIndex.foreach { case (b, i) =>
+          if (i > 0) Thread.sleep(pauseMs)
+          input.addData(b); query.processAllAvailable()
+        }
         spark.table(name).as[Marked].collect().toSeq
       } finally query.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None => spark.conf.unset(ProviderKey)
-      }
+    } finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 
@@ -41,12 +58,22 @@ class StatefulTtlDedupTwsSpec extends SparkSpec {
     assert(out.size == 3)
     assert(out.count(_.status == Marked.Sent) == 1)
     assert(out.count(_.status == Marked.Dup) == 2)
+    assert(out.forall(_.key == r.idempotentKey))
+  }
+
+  test("distinct keys each get their own SENT (tws)") {
+    val out = runStream("tws_two_keys",
+      Seq(Seq(MockData.notSentDebitQuique, MockData.notSentDebitAbuela)),
+      ttlMillis = 0L)
+    assert(out.map(_.status) == Seq(Marked.Sent, Marked.Sent))
   }
 
   test("state persists across batches; INITIAL_LOAD never sends (tws)") {
     val boot = MockData.notSentDebitQuique.tagInitialLoad
     val fresh = MockData.notSentDebitQuique
     val other = MockData.notSentDebitAbuela
+    // the bootstrapped key dedups the later real arrival
+    // (StateAsyncParDoWithHttpHandler.scala:133-145)
     val out = runStream("tws_boot",
       Seq(Seq(boot), Seq(fresh, other)), ttlMillis = 0L)
     assert(out.count(_.status == Marked.Sent) == 1) // only abuela
@@ -56,36 +83,35 @@ class StatefulTtlDedupTwsSpec extends SparkSpec {
   }
 
   test("native TTL expires state between batches (tws)") {
-    // With a TTL the query runs TimeMode.ProcessingTime, where Spark keeps
-    // re-triggering no-data batches — processAllAvailable() never returns,
-    // and stop() kills whichever batch is mid-write (pages of benign
-    // abort-commit noise). TTLConfig expiry is evaluated on the state READ
-    // path, not by those batches, so disabling them here loses nothing and
-    // makes the run deterministic and quiet.
-    val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val r = MockData.notSentDebitQuique
-    val out = {
-      implicit val sq = spark.sqlContext
-      val prevProv = spark.conf.getOption(ProviderKey)
-      val prevNoData = spark.conf.getOption(NoDataKey)
-      spark.conf.set(ProviderKey, RocksDb)
-      spark.conf.set(NoDataKey, "false")
-      try {
-        val input = MemoryStream[MyEventRecord]
-        val query = StatefulTtlDedupTws(input.toDS(), ttlMillis = 300L)
-          .writeStream.format("memory").queryName("tws_ttl")
-          .outputMode(OutputMode.Append).start()
-        try {
-          input.addData(Seq(r)); query.processAllAvailable()
-          Thread.sleep(700) // wall-clock: TTLConfig uses real processing time
-          input.addData(Seq(r)); query.processAllAvailable()
-          spark.table("tws_ttl").as[Marked].collect().toSeq
-        } finally query.stop()
-      } finally {
-        prevProv.fold(spark.conf.unset(ProviderKey))(v => spark.conf.set(ProviderKey, v))
-        prevNoData.fold(spark.conf.unset(NoDataKey))(v => spark.conf.set(NoDataKey, v))
-      }
-    }
+    val out = runStream("tws_ttl", Seq(Seq(r), Seq(r)),
+      ttlMillis = 300L, pauseMs = 700L)
     assert(out.map(_.status) == Seq(Marked.Sent, Marked.Sent))
+  }
+
+  test("duplicates do NOT extend the TTL window (tws)") {
+    // TTL T = 6 s, pause p = 0.6 T between batches; a warm-up key goes
+    // first so the timed batches run on a compiled query. The first r arms
+    // the window at its batch start b1. The dup starts one batch + p after
+    // b1 — inside the window while that batch takes < 0.4 T (2.4 s) — and
+    // emits its marker without touching state
+    // (StateAsyncParDoWithHttpHandler:105-131). The third r starts at least
+    // 2p = 1.2 T after b1, 1.2 s past the un-extended deadline, so it is
+    // SENT again; had the dup re-armed the window, the third r would start
+    // one batch + p < T after the dup and be a dup.
+    val r = MockData.notSentDebitQuique
+    val out = runStream("tws_rearm",
+      Seq(Seq(MockData.notSentDebitAbuela), Seq(r), Seq(r), Seq(r)),
+      ttlMillis = 6000L, pauseMs = 3600L)
+    assert(out.count(_.status == Marked.Sent) == 3) // abuela + r twice
+    assert(out.count(_.status == Marked.Dup) == 1)
+  }
+
+  test("works on batch datasets too (tws)") {
+    val r = MockData.notSentDebitQuique
+    val ds = spark.createDataset(Seq(r, r, MockData.notSentDebitAbuela))
+    val out = StatefulTtlDedupTws(ds, ttlMillis = 0L).collect().toSeq
+    assert(out.count(_.status == Marked.Sent) == 2)
+    assert(out.count(_.status == Marked.Dup) == 1)
   }
 }

@@ -35,7 +35,7 @@ class StreamingDedupSpec extends SparkSpec {
   // This is exactly the reference's TTL'd BagState semantics
   // (mediation/http/StateAsyncParDoWithHttpHandler.scala:86-95) with the
   // TTL driven by event time instead of a processing-time timer; the
-  // custom [[StatefulTtlDedup]] remains for the processing-time contract
+  // custom [[StatefulTtlDedupTws]] remains for the processing-time contract
   // and the duplicate-MARKER (tag, don't drop) output shape.
   test("dropDuplicatesWithinWatermark: duplicates suppressed within the window, key re-admitted after expiry") {
     implicit val sq = spark.sqlContext
