@@ -5,13 +5,9 @@ import graft.model.{MockData, MyEventRecord}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-/** D3 via transformWithState + native state TTL (RocksDB provider):
-  * replays the reference's e2e scenario — 1 unique + 2 duplicate records →
-  * 1 SENT + 2 SENT_OR_DUPLICATED, all three inputs produce an output row
-  * (test/scala/mediation/MediationServiceSpec.scala:45-83) — plus the TTL
-  * and bootstrap contracts.
-  */
-class StatefulTtlDedupTwsSpec extends SparkSpec {
+/** Streams records through [[StatefulTtlDedupTws]] on the RocksDB state
+  * store; shared by the TWS engine spec and the D3 semantics spec. */
+abstract class TwsDedupHarness extends SparkSpec {
   import spark.implicits._
 
   private val RocksDb =
@@ -28,7 +24,7 @@ class StatefulTtlDedupTwsSpec extends SparkSpec {
     * abort-commit noise). TTLConfig expiry is evaluated on the state READ
     * path, not by those batches, so TTL'd runs disable them: nothing is
     * lost and the run is deterministic and quiet. */
-  private def runStream(name: String, batches: Seq[Seq[MyEventRecord]],
+  protected def runStream(name: String, batches: Seq[Seq[MyEventRecord]],
       ttlMillis: Long, pauseMs: Long = 0L): Seq[Marked] = {
     implicit val sq = spark.sqlContext
     val settings = Seq(ProviderKey -> RocksDb) ++
@@ -51,6 +47,11 @@ class StatefulTtlDedupTwsSpec extends SparkSpec {
       v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
+}
+
+/** D3 via transformWithState + native state TTL (RocksDB provider). The
+  * D3 contract itself is in [[StatefulTtlDedupSpec]]. */
+class StatefulTtlDedupTwsSpec extends TwsDedupHarness {
 
   test("1 unique + 2 dups => 1 SENT + 2 SENT_OR_DUPLICATED (tws)") {
     val r = MockData.notSentDebitQuique
@@ -58,14 +59,6 @@ class StatefulTtlDedupTwsSpec extends SparkSpec {
     assert(out.size == 3)
     assert(out.count(_.status == Marked.Sent) == 1)
     assert(out.count(_.status == Marked.Dup) == 2)
-    assert(out.forall(_.key == r.idempotentKey))
-  }
-
-  test("distinct keys each get their own SENT (tws)") {
-    val out = runStream("tws_two_keys",
-      Seq(Seq(MockData.notSentDebitQuique, MockData.notSentDebitAbuela)),
-      ttlMillis = 0L)
-    assert(out.map(_.status) == Seq(Marked.Sent, Marked.Sent))
   }
 
   test("state persists across batches; INITIAL_LOAD never sends (tws)") {
@@ -87,31 +80,5 @@ class StatefulTtlDedupTwsSpec extends SparkSpec {
     val out = runStream("tws_ttl", Seq(Seq(r), Seq(r)),
       ttlMillis = 300L, pauseMs = 700L)
     assert(out.map(_.status) == Seq(Marked.Sent, Marked.Sent))
-  }
-
-  test("duplicates do NOT extend the TTL window (tws)") {
-    // TTL T = 6 s, pause p = 0.6 T between batches; a warm-up key goes
-    // first so the timed batches run on a compiled query. The first r arms
-    // the window at its batch start b1. The dup starts one batch + p after
-    // b1 — inside the window while that batch takes < 0.4 T (2.4 s) — and
-    // emits its marker without touching state
-    // (StateAsyncParDoWithHttpHandler:105-131). The third r starts at least
-    // 2p = 1.2 T after b1, 1.2 s past the un-extended deadline, so it is
-    // SENT again; had the dup re-armed the window, the third r would start
-    // one batch + p < T after the dup and be a dup.
-    val r = MockData.notSentDebitQuique
-    val out = runStream("tws_rearm",
-      Seq(Seq(MockData.notSentDebitAbuela), Seq(r), Seq(r), Seq(r)),
-      ttlMillis = 6000L, pauseMs = 3600L)
-    assert(out.count(_.status == Marked.Sent) == 3) // abuela + r twice
-    assert(out.count(_.status == Marked.Dup) == 1)
-  }
-
-  test("works on batch datasets too (tws)") {
-    val r = MockData.notSentDebitQuique
-    val ds = spark.createDataset(Seq(r, r, MockData.notSentDebitAbuela))
-    val out = StatefulTtlDedupTws(ds, ttlMillis = 0L).collect().toSeq
-    assert(out.count(_.status == Marked.Sent) == 2)
-    assert(out.count(_.status == Marked.Dup) == 1)
   }
 }
