@@ -205,6 +205,14 @@ object MediationApp {
       }
     val cfg = GraftConfig.load(sys.env.getOrElse("GRAFT_ENV", "dev"))
       .copy(trigger = Trigger.AvailableNow())
+    // a bounded drain must end: the TTL'd dedup runs TimeMode.ProcessingTime,
+    // whose operator always asks for another (no-data) batch, so AvailableNow
+    // never terminates while those batches are on. They emit nothing here —
+    // TTL expiry is evaluated on the state read path, and the toxic sink
+    // writes each batch's rows as they come — so the drain turns them off
+    // (the same choice TwsDedupHarness makes in the specs). `start` keeps
+    // the engine default for long-running queries.
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // S1: bus source selected by config — Kafka (wire-decoded via the Avro
     // codec) when configured, the dir-tail stand-in otherwise
     val events = cfg.source match {

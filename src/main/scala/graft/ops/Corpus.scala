@@ -840,13 +840,33 @@ object Corpus {
    * word frequency from [[TextKit.tokens]] — identical conventions to
    * [[bpePairStats]], whose output is exactly this trainer's round-1
    * census.
+   *
+   * Cluster caveat: each round's dictionary is an eager `localCheckpoint`
+   * — blocks on the executors that computed them, with the lineage cut
+   * and no replica. Losing an executor (a crash, a preemption, or
+   * dynamic allocation releasing it when
+   * `spark.dynamicAllocation.cachedExecutorIdleTimeout` is set finite)
+   * loses those blocks; the round cannot be recomputed, so the whole
+   * training call fails and must be rerun. On preemptible or autoscaled
+   * clusters, keep that timeout at its default (infinite) and accept a
+   * rerun on executor loss. Only the current and the previous round are
+   * held at any time.
    */
-  /** First merge rounds run the unguarded fold; later rounds add the
-    * containment guard (see the call site in [[trainBpeMerges]]). 24 ≈
-    * where byte-level BPE stops picking pairs present in most words
-    * (the top ~20 English char bigrams cover the bulk of running text;
-    * beyond them per-word hit rates fall fast). */
+  /** The first `guardFromRound` merge rounds run the unguarded fold;
+    * rounds `guardFromRound + 1` on add the containment guard (see the
+    * call site in [[trainBpeMerges]]). 24 ≈ where byte-level BPE stops
+    * picking pairs present in most words (the top ~20 English char
+    * bigrams cover the bulk of running text; beyond them per-word hit
+    * rates fall fast). */
   private[ops] val guardFromRound = 24
+
+  /** Drop the blocks behind an eager `localCheckpoint`: its plan is a
+    * `LogicalRDD` over the checkpointed RDD, which the Dataset cache
+    * manager does not track, so `Dataset.unpersist` would not free them. */
+  private def releaseLocalCheckpoint(ds: DataFrame): Unit =
+    ds.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   def trainBpeMerges(df: DataFrame, textCol: String, nMerges: Int)
       : Seq[(String, String, Long)] = {
@@ -862,8 +882,9 @@ object Corpus {
     // The eager checkpoint freezes each round to a scan of materialized
     // rows, making per-round plan cost O(1); the materializing job replaces
     // the argmax-triggered cache fill, so the action count is unchanged.
-    // Old round RDDs are unreferenced after the swap and reclaimed by the
-    // ContextCleaner (vocab-bound rows — ≤ a few MB per round here).
+    // Each round releases its predecessor's blocks once its own checkpoint
+    // has materialized (the eager checkpoint no longer reads them), and the
+    // last round's blocks go when training ends.
     var dict = df.repartition(par)
       .select(explode(TextKit.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -884,13 +905,14 @@ object Corpus {
       else {
         val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((l, r, c))
-        // Guard the merge fold only from round `guardFromRound` on: the
-        // first rounds pick the corpus's highest-frequency char pairs, so
-        // nearly every word contains both symbols and the guard's two
-        // array_contains probes are pure per-word overhead (measured r13:
-        // guarding EVERY round cost +0.8–1.0 s on the 12-merge gate, both
-        // builder sweep 4.17→4.99 s and driver 3.81→4.80 s — VERDICT r13
-        // item 2). Deep in a real training run (10³–10⁵ merges) the argmax
+        // Guard the merge fold only after round `guardFromRound` (this is
+        // round `merges.length`, so the guard starts at round
+        // guardFromRound + 1): the first rounds pick the corpus's
+        // highest-frequency char pairs, so nearly every word contains both
+        // symbols and the guard's two array_contains probes are pure
+        // per-word overhead (measured r13: guarding EVERY round cost
+        // +0.8–1.0 s on the 12-merge gate, both builder sweep 4.17→4.99 s
+        // and driver 3.81→4.80 s — VERDICT r13 item 2). Deep in a real training run (10³–10⁵ merges) the argmax
         // pair is rare and the guard skips the O(n²)-copy fold for almost
         // every word — that long tail keeps it. Output identical either
         // way (the guard is the fold's no-op precondition).
@@ -898,9 +920,12 @@ object Corpus {
           if (merges.length > guardFromRound)
             bpeMergePassGuarded(col("sym"), l, r)
           else bpeMergePass(col("sym"), l, r)
+        val prev = dict
         dict = dict.select(col("f"), pass.as("sym")).localCheckpoint(true)
+        releaseLocalCheckpoint(prev)
       }
     }
+    releaseLocalCheckpoint(dict)
     merges.toSeq
   }
 

@@ -9,10 +9,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -119,7 +115,8 @@ object GraftLake {
       retired: Map[String, Long] = Map.empty, ckptEvery: Int = 0,
       props: Map[String, String] = Map.empty,
       clusterBounds: Option[String] = None,
-      features: Set[String] = Set.empty) {
+      features: Set[String] = Set.empty,
+      txns: Map[String, Long] = Map.empty) {
     def activePaths: Seq[String] = files.map(f => GraftLake.absPath(dir, f.path))
   }
 
@@ -403,10 +400,18 @@ object GraftLake {
       .sortBy(_._1).lastOption.map(p => parseCkpt(p._2))
   }
 
+  /** Log folds ([[stateAt]] calls) — process-wide observability, in the
+    * style of [[lostFences]]; not part of any correctness path. An
+    * uncontended append or stream epoch folds once (the caller's
+    * pre-snapshot, reused by stage, the fence and auto-compaction), plus
+    * once more when the commit lands on a checkpoint version. */
+  private[lake] val folds = new java.util.concurrent.atomic.AtomicLong()
+
   /** Fold the log to `target`, starting from the newest usable checkpoint
     * — the read path that keeps working when the table has streamed for
     * weeks: O(active files + tail commits), never O(total history). */
   private def stateAt(dir: String, target: Long): LogState = {
+    folds.incrementAndGet()
     require(target >= 0 && versionFile(dir, target).exists(),
       s"no version $target in $dir")
     val base = latestCheckpointAt(dir, target)
@@ -510,7 +515,7 @@ object GraftLake {
       org.apache.spark.sql.types.DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
     Snapshot(dir, target, schema, st.files.values.toSeq,
       math.max(st.maxColId, schema.fields.flatMap(idOf).foldLeft(0L)(math.max).toInt),
-      st.retired, st.ckptEvery, st.props, st.clusterBounds, st.features)
+      st.retired, st.ckptEvery, st.props, st.clusterBounds, st.features, st.txns)
   }
 
   // ── the atomic commit fence ──────────────────────────────────────────
@@ -551,62 +556,15 @@ object GraftLake {
 
   // ── footer stats ─────────────────────────────────────────────────────
 
-  /** Min/max/nullCount per column from parquet footers only (no data
-    * scan); distributed when the file list is large. Kinds: "long"
-    * (INT32/INT64), "double" (FLOAT/DOUBLE), "string" (BINARY/UTF8).
-    * Absent or unknown stats stay None — pruning treats that file as
-    * always-overlapping (conservative). */
+  /** Min/max/nullCount per file and column from parquet footers only
+    * (no data scan, [[ParquetFooter.stats]]); distributed when the file
+    * list is large. */
   private[lake] def footerStats(spark: SparkSession,
       paths: Seq[String]): Map[String, (Long, Long, Map[String, ColStats])] = {
     val conf = new SerializableWritable(spark.sessionState.newHadoopConf())
-    def one(p: String): (String, (Long, Long, Map[String, ColStats])) = {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf.value))
-      try {
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        val bytes = blocks.map(_.getCompressedSize).sum
-        val perCol = scala.collection.mutable.Map.empty[String, ColStats]
-        blocks.foreach { b =>
-          b.getColumns.asScala.foreach { cc =>
-            val name = cc.getPath.toDotString
-            val st = cc.getStatistics
-            val kind = cc.getPrimitiveType.getPrimitiveTypeName match {
-              case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 => Some("long")
-              case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE => Some("double")
-              case PrimitiveTypeName.BINARY => Some("string")
-              case _ => None
-            }
-            kind.foreach { k =>
-              val nulls = if (st == null || st.getNumNulls < 0) -1L else st.getNumNulls
-              val (mn, mx) =
-                if (st == null || st.isEmpty || !st.hasNonNullValue) (None, None)
-                else k match {
-                  case "string" =>
-                    (Some(st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8),
-                     Some(st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8))
-                  case _ => (Some(st.genericGetMin.toString), Some(st.genericGetMax.toString))
-                }
-              val merged = perCol.get(name) match {
-                case None => ColStats(mn, mx, nulls, k)
-                case Some(prev) =>
-                  def m2(a: Option[String], b: Option[String], lt: Boolean) =
-                    (a, b) match {
-                      case (Some(x), Some(y)) =>
-                        Some(if (cmp(k, x, y) < 0 == lt) x else y)
-                      case _ => None // any block without stats poisons the bound
-                    }
-                  ColStats(m2(prev.min, mn, lt = true), m2(prev.max, mx, lt = false),
-                    if (prev.nullCount < 0 || nulls < 0) -1L else prev.nullCount + nulls, k)
-              }
-              perCol(name) = merged
-            }
-          }
-        }
-        p -> ((rows, bytes, perCol.toMap))
-      } finally r.close()
-    }
-    if (paths.size <= 16) paths.map(one).toMap
-    else spark.sparkContext.parallelize(paths, math.min(paths.size, 64)).map(one).collect().toMap
+    if (paths.size <= 16) paths.map(p => p -> ParquetFooter.stats(p, conf.value)).toMap
+    else spark.sparkContext.parallelize(paths, math.min(paths.size, 64))
+      .map(p => p -> ParquetFooter.stats(p, conf.value)).collect().toMap
   }
 
   /** Table-level per-column (kind, min, max, nullCount) folded from the
@@ -667,7 +625,7 @@ object GraftLake {
       })))
     }.toMap
 
-  private def cmp(kind: String, a: String, b: String): Int = kind match {
+  private[lake] def cmp(kind: String, a: String, b: String): Int = kind match {
     case "long" => java.lang.Long.compare(a.toLong, b.toLong)
     case "double" => java.lang.Double.compare(a.toDouble, b.toDouble)
     case _ => utf8Cmp(a, b)
@@ -906,8 +864,14 @@ object GraftLake {
         adds.foreach(a => new File(dir, a.path).delete()); throw e
     }
 
+  /** Write `df` as parquet files into `data/`, validated against and
+    * carrying the blooms of `stageSnap` — the caller's already-folded
+    * snapshot (None only for a table that has no version yet). A
+    * constraint set after that snapshot is caught under the fence
+    * ([[fenceConstraints]], or the lost fence of a rewrite that planned
+    * from the same snapshot). */
   private def stage(df: DataFrame, dir: String, numFiles: Int,
-      target: StructType): Staged = {
+      target: StructType, stageSnap: Option[Snapshot]): Staged = {
     val spark = df.sparkSession
     val staged = new File(dir, s"_staged/${UUID.randomUUID()}")
     // every written file passes through here — append, CTAS, CoW
@@ -916,8 +880,6 @@ object GraftLake {
     // ADD-time scan's induction) AND the bloom-filter choke point
     // (every file written after the property is set carries the blooms;
     // OPTIMIZE rewrites backfill older files)
-    val stageSnap: Option[Snapshot] =
-      if (latestVersion(dir) < 0) None else Some(snapshot(spark, dir))
     val cs0: Seq[(String, String)] =
       stageSnap.map(constraintsOf).getOrElse(Nil)
     val checked = {
@@ -993,7 +955,7 @@ object GraftLake {
       checkpointEvery: Int = 10): Long = {
     require(!versionFile(dir, 0).exists(), s"lake table already exists: $dir")
     val schema = assignIds(df.schema)
-    val adds = stage(df, dir, numFiles, schema).adds
+    val adds = stage(df, dir, numFiles, schema, None).adds
     val c = Commit(0L, System.currentTimeMillis(), "create", None, None,
       Some(schema.json), adds, Nil, ckptEvery = Some(checkpointEvery),
       maxColId = Some(schema.fields.length))
@@ -1109,17 +1071,17 @@ object GraftLake {
       case Some(cols) => df.sortWithinPartitions(clusterSortKey(pre, df, cols))
       case None => df
     }
-    val batch = stage(staged, dir, numFiles, merged0)
+    val batch = stage(staged, dir, numFiles, merged0, Some(pre))
     val adds = batch.adds
-    val v = discardOnThrow(dir, adds) { retry(dir, "append") { snap =>
+    val (v, committed) = discardOnThrow(dir, adds) { retry(dir, "append", Some(pre)) { snap =>
       fenceConstraints(batch, snap, "append")
       val merged = mergedUnderFence(snap, df.schema, merged0, "append")
       val schemaJson = if (merged == snap.schema) None else Some(merged.json)
       Some((Commit(snap.version + 1, System.currentTimeMillis(), "append",
         None, None, schemaJson, adds, Nil,
-        maxColId = Some(maxIdOf(merged, snap.maxColId))), snap.version + 1))
+        maxColId = Some(maxIdOf(merged, snap.maxColId))), (snap.version + 1, snap)))
     } }.get
-    maybeAutoCompact(spark, dir)
+    maybeAutoCompact(spark, dir, committed, adds)
     v
   }
 
@@ -1141,10 +1103,13 @@ object GraftLake {
     * the remainder grows with the backlog (0.41 s → 0.79 s). */
   private[graft] val AutoCompactMaxVictims = 64
 
-  private def maybeAutoCompact(spark: SparkSession, dir: String): Unit = {
-    val snap = snapshot(spark, dir)
-    if (!snap.props.get("autoCompact").exists(_.equalsIgnoreCase("true"))) return
-    if (snap.files.count(_.bytes < (32L << 20)) < ConsolidateSmallGenerations)
+  /** Decides from `base`, the snapshot the append committed on top of,
+    * plus the commit's `adds` — exactly the state it published, with no
+    * fresh fold. */
+  private def maybeAutoCompact(spark: SparkSession, dir: String,
+      base: Snapshot, adds: Seq[AddFile]): Unit = {
+    if (!base.props.get("autoCompact").exists(_.equalsIgnoreCase("true"))) return
+    if ((base.files ++ adds).count(_.bytes < (32L << 20)) < ConsolidateSmallGenerations)
       return
     try { optimize(spark, dir, maxVictims = AutoCompactMaxVictims); () } catch {
       case e: Exception => System.err.println(
@@ -1185,9 +1150,9 @@ object GraftLake {
     val spark = df.sparkSession
     val pre = snapshot(spark, dir)
     val merged0 = mergeSchemas(pre.schema, df.schema, pre.maxColId, pre.retired)
-    val batch = stage(df, dir, numFiles, merged0)
+    val batch = stage(df, dir, numFiles, merged0, Some(pre))
     val adds = batch.adds
-    discardOnThrow(dir, adds) { retry(dir, "overwrite") { snap =>
+    discardOnThrow(dir, adds) { retry(dir, "overwrite", Some(pre)) { snap =>
       fenceConstraints(batch, snap, "overwrite")
       val merged = mergedUnderFence(snap, df.schema, merged0, "overwrite")
       val schemaJson = if (merged == snap.schema) None else Some(merged.json)
@@ -1213,9 +1178,9 @@ object GraftLake {
     val schema = StructType(df.schema.fields.zipWithIndex.map {
       case (f, i) => withId(f, firstId + i)
     })
-    val batch = stage(df, dir, numFiles, schema)
+    val batch = stage(df, dir, numFiles, schema, Some(pre))
     val adds = batch.adds
-    discardOnThrow(dir, adds) { retry(dir, "replace") { snap =>
+    discardOnThrow(dir, adds) { retry(dir, "replace", Some(pre)) { snap =>
       fenceConstraints(batch, snap, "replace")
       if (snap.maxColId >= firstId)
         throw new LakeContentionException(
@@ -1279,10 +1244,9 @@ object GraftLake {
     * Streaming's foreachBatch contract. */
   def appendStreamBatch(df: DataFrame, dir: String, appId: String,
       epochId: Long, numFiles: Int = 0): Boolean = {
-    def fenced: Boolean =
-      stateAt(dir, latestVersion(dir)).txns.get(appId).exists(_ >= epochId)
-    if (fenced) return false
+    def fenced(snap: Snapshot): Boolean = snap.txns.get(appId).exists(_ >= epochId)
     val pre = snapshot(df.sparkSession, dir)
+    if (fenced(pre)) return false
     // clustered table: streaming batches best-effort sort like appends
     // (narrow, no shuffle) so continuously-ingested files land with
     // tight envelopes on the cluster columns between OPTIMIZE runs
@@ -1290,19 +1254,21 @@ object GraftLake {
       case Some(cols) => df.sortWithinPartitions(clusterSortKey(pre, df, cols))
       case None => df
     }
-    val batch = stage(staged, dir, numFiles, pre.schema)
+    val batch = stage(staged, dir, numFiles, pre.schema, Some(pre))
     val adds = batch.adds
-    val committed = discardOnThrow(dir, adds) { retry(dir, "stream-append") { snap =>
+    val committed = discardOnThrow(dir, adds) { retry(dir, "stream-append", Some(pre)) { snap =>
       fenceConstraints(batch, snap, "stream-append")
       // re-check under the fence: a racing attempt of the SAME epoch may
       // have won a version while we staged
-      if (fenced) None
+      if (fenced(snap)) None
       else
         Some((Commit(snap.version + 1, System.currentTimeMillis(), "stream-append",
-          Some(appId), Some(epochId), None, adds, Nil), snap.version + 1))
+          Some(appId), Some(epochId), None, adds, Nil), snap))
     } }
-    if (committed.isEmpty) adds.foreach(a => new File(dir, a.path).delete())
-    else maybeAutoCompact(df.sparkSession, dir)
+    committed match {
+      case None => adds.foreach(a => new File(dir, a.path).delete())
+      case Some(base) => maybeAutoCompact(df.sparkSession, dir, base, adds)
+    }
     committed.isDefined
   }
 
@@ -1391,7 +1357,7 @@ object GraftLake {
               byName.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
                 .getOrElse(col(fld.name))
             }: _*)
-          val newAdds = stage(updated, dir, 0, snap.schema).adds
+          val newAdds = stage(updated, dir, 0, snap.schema, Some(snap)).adds
           Some((Commit(snap.version + 1, System.currentTimeMillis(),
             "update-mor", None, None, None, dvAdds ++ newAdds, rm),
             snap.version + 1))
@@ -1942,7 +1908,7 @@ object GraftLake {
         val marked = bitmapsOf(slim.where(col("__gl_touched"))
           .select(col("__gl_file"), col("__gl_pos")).as[(String, Long)])
         val emitted = slim.where(col("__gl_r").isNotNull).select("__gl_r.*")
-        val newAdds = stage(emitted, dir, 0, evolved).adds
+        val newAdds = stage(emitted, dir, 0, evolved, Some(snap)).adds
         val (rm, dvAdds) = dvGrow(dir,
           victims.map(f => baseName(f.path) -> f).toMap, marked)
         if (rm.isEmpty && newAdds.isEmpty) None
@@ -2338,9 +2304,7 @@ object GraftLake {
     * blooms inside each task's row-group filtering). */
   private[graft] def readBloom(spark: SparkSession, file: String,
       column: String): Option[org.apache.parquet.column.values.bloomfilter.BloomFilter] = {
-    val in = HadoopInputFile.fromPath(new Path(file),
-      spark.sessionState.newHadoopConf())
-    val r = ParquetFileReader.open(in)
+    val r = ParquetFooter.open(file, spark.sessionState.newHadoopConf())
     try {
       val block = r.getFooter.getBlocks.get(0)
       block.getColumns.asScala.find(_.getPath.toDotString == column)
@@ -3034,14 +2998,26 @@ object GraftLake {
 
   // ── shared rewrite/retry machinery ───────────────────────────────────
 
+  /** Test-only seam: invoked (once) at the start of a [[retry]] loop,
+    * after the caller took its pre-snapshot and staged — lets a spec land
+    * a concurrent commit between the pre-snapshot and the fence. */
+  private[lake] var testHookBeforeFence: Option[String => Unit] = None
+
   /** Fence-retry loop: `build` sees the latest snapshot and returns the
-    * commit to attempt (None = nothing to do). */
-  private def retry[A](dir: String, op: String)(
+    * commit to attempt (None = nothing to do). The first attempt reuses
+    * `pre`, the caller's snapshot, while it is still the latest version
+    * (versions are immutable, so an unchanged latest version means an
+    * unchanged state); any newer version, and every later attempt, folds
+    * afresh. */
+  private def retry[A](dir: String, op: String, pre: Option[Snapshot] = None)(
       build: Snapshot => Option[(Commit, A)]): Option[A] = {
     val spark = SparkSession.active
+    testHookBeforeFence.foreach { h => testHookBeforeFence = None; h(op) }
+    var reuse = pre.filter(_.version == latestVersion(dir))
     var attempts = 0
     while (attempts < 20) {
-      val snap = snapshot(spark, dir)
+      val snap = reuse.getOrElse(snapshot(spark, dir))
+      reuse = None
       build(snap) match {
         case None => return None
         case Some((c, a)) =>
@@ -3104,7 +3080,7 @@ object GraftLake {
       // merge ops can commit with zero victims (insert-only merges); every
       // other rewrite with nothing to replace is a no-op
       if (victims.isEmpty && op != "merge" && op != "merge-into") return snap.version
-      val adds = stage(replacement, dir, 0, evolvedOpt.getOrElse(snap.schema))
+      val adds = stage(replacement, dir, 0, evolvedOpt.getOrElse(snap.schema), Some(snap))
         .adds.map(a => if (clusterTag.isDefined) a.copy(cluster = clusterTag) else a)
       testHookBeforeRewriteCommit.foreach { h =>
         testHookBeforeRewriteCommit = None; h(op)

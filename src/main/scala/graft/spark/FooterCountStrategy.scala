@@ -1,8 +1,5 @@
 package graft.spark
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SerializableWritable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -83,8 +80,7 @@ case class FooterCountExec(resultAttr: Attribute,
         .mapPartitions { it =>
           var s = 0L
           it.foreach { p =>
-            val in = HadoopInputFile.fromPath(new Path(p), hadoopConf.value)
-            val r = ParquetFileReader.open(in)
+            val r = graft.sources.lake.ParquetFooter.open(p, hadoopConf.value)
             try s += r.getRecordCount finally r.close()
           }
           Iterator.single(s)

@@ -349,4 +349,14 @@ class CorpusFilterSpec extends SparkSpec {
     val b = Corpus.trainBpeMerges(docs, "text", nMerges = 3)
     assert(a == b)
   }
+
+  test("trainBpeMerges releases every round's localCheckpoint") {
+    val docs = Seq((1L, "low low lower newest newest widest")).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val merges = Corpus.trainBpeMerges(docs, "text", nMerges = 4)
+    assert(merges.size == 4)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"checkpointed rounds still held: $left")
+  }
 }
