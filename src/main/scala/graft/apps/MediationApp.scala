@@ -1,5 +1,6 @@
 package graft.apps
 
+import graft.functions.Kit
 import graft.model.{MyEventRecord, SendResult}
 import graft.streaming.{AsyncEnrich, Marked, StatefulTtlDedupTws, WindowedSink}
 import org.apache.spark.sql.functions._
@@ -119,9 +120,7 @@ object MediationApp {
         val histKeys = bootstrap(spark, historicalPaths)
           .map(_.idempotentKey).toDF("idempotent_key")
         ok.withColumn("idempotent_key",
-            concat_ws("-",
-              coalesce(col("event.transactionId"), lit("null")),
-              coalesce(col("customer.id"), lit("null"))))
+            Kit.idempotentKey(col("event.transactionId"), col("customer.id")))
           .join(broadcast(histKeys), Seq("idempotent_key"), "left_anti")
           .drop("idempotent_key")
           .as[MyEventRecord]

@@ -17,6 +17,9 @@ object Kit {
     * string interpolation, where a null side renders as the literal "null"
     * — preserved here (its spec asserts that negative case); the validity
     * router (F1/F2) upstream keeps such records out of the real pipeline.
+    * Must equal [[graft.model.MyEventRecord.idempotentKey]]: the
+    * historical-key anti-join (D2) keys on this column, the stateful dedup
+    * (D3) on the typed key.
     */
   def idempotentKey(tx: Column, cust: Column): Column =
     concat(coalesce(tx, lit("null")), lit("-"), coalesce(cust, lit("null")))
@@ -28,11 +31,6 @@ object Kit {
   /** U2/P2 — bootstrap tag check (StateAsyncParDoWithHttpHandler.scala:111). */
   def isInitialLoad(eventId: Column): Column =
     eventId.startsWith(graft.model.MyEventRecord.InitialLoadPrefix)
-
-  /** U3 — case-insensitive failure sniff on a response body
-    * (MyHttpResponse.scala:19-27). */
-  def isKoBody(body: Column): Column =
-    lower(body).contains("error") || lower(body).contains("ko")
 
   // ── time kit ─────────────────────────────────────────────────────────────
 
@@ -75,13 +73,6 @@ object Kit {
     val s = ((ms % 60000L) / 1000L).cast("long")
     concat(h, lit("h "), m, lit("m "), s, lit("sec"))
   }
-
-  /** U11 — last-N-days date list ["yyyy/MM/dd", …], newest first
-    * (utils/TimeUtilsInterim.scala:10-14). */
-  def lastNDays(n: Int): Column =
-    reverse(transform(
-      sequence(date_sub(current_date(), n - 1), current_date()),
-      d => date_format(d, "yyyy/MM/dd")))
 
   /** Epoch-nanos → epoch-millis (testdata `events.ts` arrives as raw
     * nanos via spark.sql.legacy.parquet.nanosAsLong). SQL integer `div`

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.TextKit
+import graft.spark.LocalCheckpoint
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -584,7 +585,7 @@ object Corpus {
 
   /** Boolean keep-verdict twin of [[gopherReasons]] — a bare filter
     * predicate for pipelines that don't need the reason codes
-    * (e.g. [[graft.streaming.CorpusIngest]]'s admission gate).
+    * (e.g. [[graft.apps.CorpusPrepApp]]'s quality stage).
     */
   def gopherKeep(text: Column, t: GopherThresholds = GopherThresholds()): Column =
     gopherReasons(text, t) === ""
@@ -860,14 +861,6 @@ object Corpus {
     * rates fall fast). */
   private[ops] val guardFromRound = 24
 
-  /** Drop the blocks behind an eager `localCheckpoint`: its plan is a
-    * `LogicalRDD` over the checkpointed RDD, which the Dataset cache
-    * manager does not track, so `Dataset.unpersist` would not free them. */
-  private def releaseLocalCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   def trainBpeMerges(df: DataFrame, textCol: String, nMerges: Int)
       : Seq[(String, String, Long)] = {
     require(nMerges >= 1, "nMerges must be positive")
@@ -922,10 +915,10 @@ object Corpus {
           else bpeMergePass(col("sym"), l, r)
         val prev = dict
         dict = dict.select(col("f"), pass.as("sym")).localCheckpoint(true)
-        releaseLocalCheckpoint(prev)
+        LocalCheckpoint.release(prev)
       }
     }
-    releaseLocalCheckpoint(dict)
+    LocalCheckpoint.release(dict)
     merges.toSeq
   }
 

@@ -27,7 +27,7 @@ object Dedup {
    *
    * Shape: a NARROW min-order aggregate + hash join-back, chosen over the
    * two obvious formulations after measuring all three on a 2M-row corpus
-   * with a 20%-hot key (graft.SkewBench):
+   * with a 20%-hot key (README "Skew stress"):
    *   - `row_number().over(Window.partitionBy(key))` sorts every key's
    *     rows in ONE task — a straggler/OOM when one viral key holds 10⁸
    *     duplicates (the #1 real-world dedup hazard);
@@ -149,23 +149,6 @@ object Dedup {
     val b = mix64(2L * i + 2) & 0x7FFFFFFFL
     (a, b)
   }
-
-  /**
-   * MinHash signatures via the native single-pass expression
-   * ([[graft.functions.MinHashSig]] — the composed HOF formulation falls out
-   * of whole-stage codegen at 128 hashes and runs ~500× slower interpreted).
-   * The input is repartitioned to the session's default parallelism first:
-   * sketching is CPU-bound and the testdata arrives as a single parquet
-   * row-group (1 partition); on a real cluster the scan is already split,
-   * and the repartition is a cheap no-op-sized shuffle relative to the
-   * sketch cost either way.
-   */
-  def withMinhashSignature(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, shingleLen: Int, oph: Boolean = false): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("doc"),
-        graft.functions.NativeTextKit.minhashSig(col(textCol), numHashes, shingleLen, oph)
-          .as("sig"))
 
   /**
    * MinHash-LSH near-duplicate candidate pairs: signature → `bands` bands of

@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions._
  * merge of a dimension-cardinality table.
  *
  * Layout: `mvPath/v=<version>/` parquet, one dir per refresh; readers
- * take the max version (the time-travel/rollback surface, same
- * discipline as [[graft.streaming.CdcStream]]). Streaming maintenance
- * writes version = epochId and reads state STRICTLY BELOW it, so a
- * replayed micro-batch overwrites its own version instead of
+ * take the max version (the time-travel/rollback surface). Streaming
+ * maintenance writes version = epochId and reads state STRICTLY BELOW
+ * it, so a replayed micro-batch overwrites its own version instead of
  * double-applying the delta — idempotent under crash replay
  * (`MvMaintenanceSpec` proves it with a forced replay).
  *
@@ -106,8 +105,7 @@ object Mv {
    * the view at version = epochId + 1 (the caller's [[build]] seed is
    * v=0, strictly below every epoch). A replayed epoch reads the same
    * prior state (strictly below its version) and overwrites its own dir —
-   * exactly-once maintenance without a transaction log, the
-   * [[graft.streaming.CdcStream]] replay discipline.
+   * exactly-once maintenance without a transaction log.
    */
   def startMaintenance(changes: DataFrame, mvPath: String, keys: Seq[String],
       sums: Seq[String], checkpoint: String,

@@ -9,20 +9,8 @@ import org.apache.spark.sql.functions._
  */
 object Routing {
 
-  /**
-   * Two-way split on a predicate. The input should be cached (or be a cheap
-   * scan) since both branches re-read it; in streaming, do the split inside
-   * `foreachBatch` on the materialized micro-batch — same pattern the
-   * reference gets from Beam's `partition` (one pass, two outputs).
-   */
-  def okKoSplit(df: DataFrame, isOk: Column): (DataFrame, DataFrame) =
-    // NULL predicate routes to KO (same total partition as [[tagRoute]] and
-    // the reference's Either split); a bare `!isOk` would drop NULL rows
-    // from BOTH branches under three-valued logic.
-    (df.filter(isOk), df.filter(!coalesce(isOk, lit(false))))
-
-  /** One-pass routed form: adds a `route` tag column instead of splitting —
-    * preferred at scale (single scan, downstream writers partition by tag).
+  /** One-pass routed form: adds a `route` tag column (single scan,
+    * downstream writers partition by tag); a NULL predicate routes to KO.
     */
   def tagRoute(df: DataFrame, isOk: Column, okTag: String = "OK",
       koTag: String = "KO", routeCol: String = "route"): DataFrame =

@@ -60,8 +60,8 @@ object Sampling {
    * Implementation: [[TopK.topKPerGroup]] on the NEGATED priority — the
    * k-bounded typed Aggregator, so the sample is computed with one
    * map-side-combined shuffle and O(k) state per group (no window sort; a
-   * hot group never owns a single-task sort buffer — see the SkewBench
-   * notes on [[TopK]]).
+   * hot group never owns a single-task sort buffer — see the skew notes
+   * on [[TopK]]).
    */
   def reservoirPerGroup(df: DataFrame, groupCol: String, idCol: String,
       k: Int): DataFrame = {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
  * buffer — partial-aggregation capable, so a hot group's rows collapse to
  * k map-side BEFORE the exchange and the reducers merge k-sized buffers.
  *
- * WHEN TO USE (measured, graft.SkewBench, 2M rows / 20%-hot group): the
+ * WHEN TO USE (measured, README "Skew stress", 2M rows / 20%-hot group): the
  * window-rank form (`row_number().over(partitionBy(group))` +
  * `filter(rank <= k)`) is ~3× FASTER here (0.4 s vs 1.1 s) — the udaf
  * per-row decode dominates while a 400k-row single-task sort is still

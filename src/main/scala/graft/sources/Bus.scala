@@ -1,10 +1,9 @@
 package graft.sources
 
-import graft.functions.{AvroKit, MyEventRecordWire}
+import graft.functions.{AvroKit, Kit, MyEventRecordWire}
 import graft.model.MyEventRecord
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /**
  * S1/S2/K3 — message-bus source/sink glue (the reference's Pub/Sub ingress/
@@ -53,16 +52,6 @@ object Bus {
       startingOffsets: String = "latest"): Dataset[MyEventRecord] =
     decodeRecords(kafkaSource(spark, bootstrap, topic, startingOffsets))
 
-  /** K3 via Kafka: wire-encode + publish. Caller starts the returned writer
-    * with its checkpoint/trigger options.
-    */
-  def kafkaRecordSink(ds: Dataset[MyEventRecord], bootstrap: String,
-      topic: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    encodeRecords(ds).writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
-
   // ── The runnable bus: the log-structured stand-in, same wire format ─────
 
   val logBusFmt = "graft.sources.v2.GraftLogBusSource"
@@ -73,9 +62,7 @@ object Bus {
     * key land in ONE partition and per-key order holds downstream. */
   def routeRecords(ds: Dataset[MyEventRecord], partitions: Int): DataFrame = {
     val keyed = ds.toDF().select(
-      concat_ws("-",
-        coalesce(col("event.transactionId"), lit("null")),
-        coalesce(col("customer.id"), lit("null"))).as("key"),
+      Kit.idempotentKey(col("event.transactionId"), col("customer.id")).as("key"),
       AvroKit.toAvro(
         struct(col("event"), col("customer"), col("notification"))).as("value"))
     graft.sources.v2.GraftLogBus.route(keyed, col("key"), partitions)

@@ -51,18 +51,6 @@ object Tables {
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "embeddings")
 
   /**
-   * S4 — multi-path union scan (mediation/MediationService.scala:300-303):
-   * the reference reads N date-partitioned dirs and unions them. Spark-first
-   * form: a single multi-path `load` (one FileScan, partition pruning and
-   * schema merge handled by the datasource) — NOT N separate scans unioned,
-   * which would plan N jobs at 100 TB.
-   */
-  def multiPathScan(spark: SparkSession, paths: Seq[String], format: String = "parquet"): DataFrame = {
-    configure(spark)
-    spark.read.format(format).load(paths: _*)
-  }
-
-  /**
    * F4 — existence-pruned path filter (mediation/MediationService.scala:274-295,
    * utils/GCSCommonUtilsInterim.scala:11-40): the reference lists GCS and
    * keeps only date dirs that exist before building scans, so a missing

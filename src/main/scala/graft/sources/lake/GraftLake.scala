@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import graft.spark.LocalCheckpoint
 import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1905,12 +1906,17 @@ object GraftLake {
             resultMoR.as("__gl_r"))
           .localCheckpoint(eager = true)
         import spark.implicits._
-        val marked = bitmapsOf(slim.where(col("__gl_touched"))
-          .select(col("__gl_file"), col("__gl_pos")).as[(String, Long)])
-        val emitted = slim.where(col("__gl_r").isNotNull).select("__gl_r.*")
-        val newAdds = stage(emitted, dir, 0, evolved, Some(snap)).adds
-        val (rm, dvAdds) = dvGrow(dir,
-          victims.map(f => baseName(f.path) -> f).toMap, marked)
+        // released once staged and vectored, also when this attempt then
+        // loses the fence (the retry re-plans from a fresh snapshot)
+        val (newAdds, rm, dvAdds) = try {
+          val marked = bitmapsOf(slim.where(col("__gl_touched"))
+            .select(col("__gl_file"), col("__gl_pos")).as[(String, Long)])
+          val emitted = slim.where(col("__gl_r").isNotNull).select("__gl_r.*")
+          val newAdds = stage(emitted, dir, 0, evolved, Some(snap)).adds
+          val (rm, dvAdds) = dvGrow(dir,
+            victims.map(f => baseName(f.path) -> f).toMap, marked)
+          (newAdds, rm, dvAdds)
+        } finally LocalCheckpoint.release(slim)
         if (rm.isEmpty && newAdds.isEmpty) None
         else {
           val schemaJson = if (evolved == snap.schema) None else Some(evolved.json)

@@ -14,6 +14,23 @@ class KitSpec extends SparkSpec {
     assert(out.toSeq == Seq("tx1-1", "null-2"))
   }
 
+  test("idempotentKey column equals MyEventRecord.idempotentKey, null sides included") {
+    import graft.model.{Customer, MockData}
+    import spark.implicits._
+    // the historical-key anti-join (D2) keys on the column, the stateful
+    // dedup (D3) groups on the typed key: they must agree on every record
+    val quique = MockData.notSentDebitQuique
+    val recs = Seq(quique, MockData.notSentDebitAbuela,
+      MockData.trueSentDebitQuique, MockData.invalidRecord,
+      quique.copy(customer = Customer()),
+      quique.copy(event = quique.event.copy(transactionId = None)))
+    val out = recs.toDS()
+      .select(Kit.idempotentKey(col("event.transactionId"), col("customer.id")))
+      .as[String].collect().toSeq
+    assert(out == recs.map(_.idempotentKey))
+    assert(out.contains("null-null"))
+  }
+
   test("isBusinessDay: Sundays always dropped, Saturdays only May-Sept (TimeUtils:115-120)") {
     import spark.implicits._
     val df = Seq(

@@ -356,6 +356,27 @@ class LakeDvSpec extends SparkSpec {
     spark.sql("DROP TABLE lake_dv_mm")
   }
 
+  test("MoR MERGE INTO leaves no persistent RDD behind") {
+    val dir = tmp()
+    mkTable(dir, n = 200, files = 2)
+    spark.sql("DROP TABLE IF EXISTS lake_dv_leak")
+    spark.sql(s"CREATE TABLE lake_dv_leak USING `graft-lake` OPTIONS (path '$dir')")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    spark.conf.set("spark.graft.lake.mergeMode", "mor")
+    try spark.sql(
+      """MERGE INTO lake_dv_leak t
+        |USING (SELECT id, id * 10 AS sv FROM range(0, 20)) s ON t.id = s.id
+        |WHEN MATCHED AND s.id % 2 = 0 THEN UPDATE SET v = s.sv
+        |WHEN MATCHED THEN DELETE""".stripMargin)
+    finally spark.conf.unset("spark.graft.lake.mergeMode")
+    assert(GraftLake.history(dir).last._2 == "merge-mor")
+    assert(GraftLake.read(spark, dir).count() == 190L)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"MoR merge still holds: $left")
+    spark.sql("DROP TABLE lake_dv_leak")
+  }
+
   test("merge over a DV'd table: victims re-read without deleted rows; " +
     "upsert of a deleted key re-inserts it") {
     val dir = tmp()
