@@ -93,6 +93,18 @@ object MediationApp {
    * (MemoryStream in tests; file/kafka stream in production). Returns the
    * running analytics query; toxic records stream to `toxicPath` as windowed
    * files in parallel.
+   *
+   * State store: the dedup runs on RocksDB, and `start` turns on RocksDB
+   * changelog checkpointing (`spark.sql.streaming.stateStore.rocksdb.
+   * changelogCheckpointing.enabled`) unless the caller set it. Spark 4.1
+   * defaults it to false, so every batch commit uploads a full RocksDB
+   * snapshot; with the changelog a commit writes only that batch's
+   * changes and snapshots are taken by the maintenance thread. Measured
+   * on the perfbench `mediation` workload (4-vCPU VM, two traced pairs):
+   * `state.commit_ms` 640 → 340 ms a batch, traced throughput up 4–9%,
+   * outputs unchanged; end-to-end throughput moved within noise (+2.6%
+   * over six alternating pairs). Both are session-wide settings, like
+   * the provider.
    */
   def start(spark: SparkSession, events: Dataset[MyEventRecord],
       historicalPaths: Seq[String], cfg: Config,
@@ -136,6 +148,10 @@ object MediationApp {
     if (!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
       spark.conf.set(providerKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val changelogKey =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    if (spark.conf.getOption(changelogKey).isEmpty)
+      spark.conf.set(changelogKey, "true")
     val deduped = StatefulTtlDedupTws(novel, cfg.ttlMillis, timerClear = cfg.timerCleanup)
 
     // K5 log-effect taps → Spark-native observable metrics: per-batch row

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.spark.LocalCheckpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,6 +24,13 @@ import org.apache.spark.sql.functions._
  * The edge list is cached once and reused by every round; the result is
  * node-bound, cut from its O(iters)-deep lineage with a local checkpoint
  * so the caches can be dropped on exit.
+ *
+ * Checkpoint ownership: an iterative operator releases each per-round
+ * `localCheckpoint` once its successor has materialised, so a call holds
+ * at most one checkpoint when it returns — the one backing the returned
+ * DataFrame. That one belongs to the CALLER: it lives as long as the
+ * result is read, and `graft.spark.LocalCheckpoint.release(result)` (or
+ * the end of the application) frees its blocks.
  */
 object Graph {
 
@@ -34,6 +42,7 @@ object Graph {
    * the teleport term; their outflow leaks rather than redistributing —
    * deterministic, and the standard simplification when ranks are used
    * as a relative quality prior rather than a probability distribution.
+   * The result is an eager `localCheckpoint` the caller owns.
    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, scale: Long = 1000000L): DataFrame = {
@@ -71,6 +80,7 @@ object Graph {
    * of global popularity. Same exact fixed-point integer arithmetic and
    * per-round plan as [[pageRank]]; seeds carry initial rank `scale` and
    * the 0.15·scale teleport, everything else starts and teleports at 0.
+   * The result is an eager `localCheckpoint` the caller owns.
    */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       srcCol: String, dstCol: String, seedCol: String, iters: Int = 3,
@@ -120,6 +130,7 @@ object Graph {
    *
    * Per round: two hash joins + two map-side-combined sums over the
    * cached edge list — same shuffle budget as a [[pageRank]] round.
+   * The result is an eager `localCheckpoint` the caller owns.
    */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3): DataFrame = {
@@ -168,6 +179,7 @@ object Graph {
    * Σ deg² of a naive orientation (quadratic in the hub degree: one viral
    * node of degree 10⁶ is 10¹² naive wedges but ~|E| oriented ones).
    * Three hash shuffles total (degree agg, wedge join, closing join).
+   * The result is an eager `localCheckpoint` the caller owns.
    */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val raw = edges.select(col(srcCol).cast("long").as("a"),
@@ -214,6 +226,9 @@ object Graph {
    * work is O(edges-touched), the textbook distributed BFS. Both sides of
    * every join are keyed single shuffles; the reached set is re-cached per
    * round and the loop stops early when a frontier comes back empty.
+   * Superseded frontiers and reached sets are released as the loop goes;
+   * the result is the last reached set's eager `localCheckpoint`, which
+   * the caller owns.
    */
   def bfsHops(edges: DataFrame, seeds: DataFrame, srcCol: String,
       dstCol: String, seedCol: String, maxHops: Int): DataFrame = {
@@ -235,12 +250,16 @@ object Graph {
         .join(reached.select("node"), Seq("node"), "left_anti")
         .select(col("node"), lit(hop.toLong).as("dist"))
         .localCheckpoint(eager = true)
+      if (frontier ne reached) LocalCheckpoint.release(frontier)
+      frontier = next
       if (next.isEmpty) done = true
       else {
-        frontier = next
+        val prev = reached
         reached = reached.unionByName(next).localCheckpoint(eager = true)
+        LocalCheckpoint.release(prev)
       }
     }
+    if (frontier ne reached) LocalCheckpoint.release(frontier)
     e.unpersist()
     reached
   }
@@ -257,7 +276,9 @@ object Graph {
    * destination — the whole vector relaxes each round (Bellman-Ford),
    * which unlike [[bfsHops]]' frontier trick is required once weights can
    * improve an already-reached node. Lineage stays constant via per-round
-   * eager localCheckpoint. Returns (node, dist).
+   * eager localCheckpoint, each released once the next round has
+   * materialised. Returns (node, dist): the last round's checkpoint,
+   * which the caller owns.
    */
   def shortestPaths(edges: DataFrame, seeds: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, seedCol: String,
@@ -271,9 +292,11 @@ object Graph {
     for (_ <- 1 to rounds) {
       val relaxed = dist.join(e, dist("node") === e("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+      val prev = dist
       dist = dist.unionByName(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
         .localCheckpoint(eager = true)
+      LocalCheckpoint.release(prev)
     }
     e.unpersist()
     dist
@@ -294,7 +317,9 @@ object Graph {
    * Scale posture: per round, one map-side-combined degree count and two
    * semi-joins to induce the subgraph; per-round eager localCheckpoint
    * keeps lineage constant (the peel depth is data-bounded but each round
-   * is one shuffle round-trip, same as the CC loop).
+   * is one shuffle round-trip, same as the CC loop). A superseded round's
+   * checkpoint is released once the next has materialised; the returned
+   * (lazy) DataFrame reads the last one, which the caller owns.
    */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int = 30): DataFrame = {
@@ -316,9 +341,11 @@ object Graph {
       if (kept == lastCount) done = true
       else {
         lastCount = kept
+        val prev = e
         e = e.join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
           .localCheckpoint(eager = true)
+        LocalCheckpoint.release(prev)
       }
     }
     e.select(col("a").as("n")).union(e.select(col("b").as("n")))
@@ -339,7 +366,9 @@ object Graph {
    * chains. Root self-loops are the fixed point (their own entry adds 0),
    * so extra rounds are identity; the loop exits early when the total
    * depth sum stops growing (monotone until converged). One self-join per
-   * round, constant lineage via eager localCheckpoint.
+   * round, constant lineage via eager localCheckpoint; a superseded round's
+   * checkpoint is released once the next has materialised, and the
+   * returned (lazy) DataFrame reads the last one, which the caller owns.
    */
   def rootDepths(parents: DataFrame, childCol: String, parentCol: String,
       maxRounds: Int = 20): DataFrame = {
@@ -355,10 +384,12 @@ object Graph {
       rounds += 1
       val hop = st.select(col("node").as("anc"), col("anc").as("anc2"),
         col("d").as("d2"))
+      val prev = st
       st = st.join(hop, Seq("anc"))
         .select(col("node"), col("anc2").as("anc"),
           (col("d") + col("d2")).as("d"))
         .localCheckpoint(eager = true)
+      LocalCheckpoint.release(prev)
       val s = st.agg(sum(col("d"))).head().getLong(0)
       if (s == lastSum) done = true else lastSum = s
     }
@@ -481,7 +512,9 @@ object Graph {
    * (node,label) count aggregate, and one per-node argmax as a
    * `min_by`-shaped aggregate (partial-agg capable — NOT a window sort,
    * so a celebrity node's million-neighbor vote count combines map-side).
-   * Constant lineage via eager localCheckpoint per round.
+   * Constant lineage via eager localCheckpoint per round; a superseded
+   * round's checkpoint is released once the next has materialised, and
+   * the result is the last round's, which the caller owns.
    *
    * Returns (node, label) after `rounds` rounds; isolated nodes never
    * appear (no edges → no community evidence).
@@ -495,16 +528,19 @@ object Graph {
       .distinct().cache()
     val nodes = e.select(col("a").as("node")).distinct()
     var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to rounds) {
+    for (round <- 1 to rounds) {
       val votes = e
         .join(labels.select(col("node").as("a"), col("label")), "a")
         .groupBy(col("b").as("node"), col("label"))
         .agg(count(lit(1)).as("__c"))
+      val prev = labels
       labels = votes
         .groupBy("node")
         .agg(min(struct((-col("__c")).as("negc"), col("label"))).as("__m"))
         .select(col("node"), col("__m.label").as("label"))
         .localCheckpoint(eager = true)
+      // round 1's input is the lazy identity labelling, not a checkpoint
+      if (round > 1) LocalCheckpoint.release(prev)
     }
     e.unpersist()
     labels

@@ -2,7 +2,7 @@ package graft.sources.lake
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
@@ -28,9 +28,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
  * }}}
  *
  * Commit protocol (single-writer-wins optimistic concurrency):
- *  1. stage data files under `<table>/_staged/<uuid>/`, move each into
- *     `data/` under a fresh unique name (invisible to readers — readers
- *     only see files the log references);
+ *  1. write the data files straight into `data/` under fresh unique
+ *     names, one lake-owned Spark job per write ([[DataFileWriter]]; no
+ *     staging dir, no rename committer). They are invisible to readers
+ *     until step 3: readers only see files the log references;
  *  2. write the full commit JSON to a tmp file, fsync;
  *  3. `Files.createLink(_log/v<N+1>.json, tmp)` — hard-link creation is
  *     atomic and fails if the destination exists, so exactly one writer
@@ -773,11 +774,6 @@ object GraftLake {
 
   // ── staging data files ───────────────────────────────────────────────
 
-  /** Write `df` to a staging dir with the target schema's field ids
-    * stamped into the parquet schema, move the part files into data/
-    * under fresh unique names (invisible until the log references them),
-    * and return their AddFile actions with footer stats keyed by field
-    * id (rename-stable). */
   /** CHECK-constraint property prefix (the Delta shape —
     * `delta.constraints.<name>`): any folded table property
     * `constraint.<name> = <boolean SQL expr>` is enforced on EVERY
@@ -873,8 +869,6 @@ object GraftLake {
     * from the same snapshot). */
   private def stage(df: DataFrame, dir: String, numFiles: Int,
       target: StructType, stageSnap: Option[Snapshot]): Staged = {
-    val spark = df.sparkSession
-    val staged = new File(dir, s"_staged/${UUID.randomUUID()}")
     // every written file passes through here — append, CTAS, CoW
     // rewrites, merge outputs, streaming batches — so this is THE
     // constraint choke point (CoW re-staged rows satisfy by the
@@ -902,30 +896,16 @@ object GraftLake {
       }
     val stamped = stampIds(checked, target)
     val out = if (numFiles > 0) stamped.repartition(numFiles) else stamped
-    out.write.mode("overwrite")
-      .options(stageSnap.map(bloomWriteOptions(_, df.columns.toSeq, target))
-        .getOrElse(Map.empty))
-      .parquet(staged.getAbsolutePath)
-    val parts = Option(staged.listFiles((_, n) => n.startsWith("part-") && n.endsWith(".parquet")))
-      .getOrElse(Array.empty[File]).sortBy(_.getName)
-    dataDir(dir).mkdirs()
-    val moved = parts.toSeq.map { p =>
-      val rel = s"data/part-${UUID.randomUUID()}.parquet"
-      Files.move(p.toPath, Paths.get(dir, rel), StandardCopyOption.ATOMIC_MOVE)
-      rel
-    }
-    val stats = footerStats(spark, moved.map(r => s"$dir/$r"))
-    deleteRecursively(staged)
+    val written = DataFileWriter.write(out, dir,
+      stageSnap.map(bloomWriteOptions(_, df.columns.toSeq, target)).getOrElse(Map.empty))
     // stats come keyed by the parquet column NAME at write time — the
     // PHYSICAL name since stampIds — and re-key to the field id where
     // one exists so pruning survives later renames (id-less fields stay
     // keyed by their physical name, which is itself rename-stable)
     val keyOf: Map[String, String] =
       target.fields.flatMap(f => idOf(f).map(id => physNameOf(f) -> id.toString)).toMap
-    Staged(moved.map { rel =>
-      val (rows, bytes, cs) = stats(s"$dir/$rel")
-      AddFile(rel, rows, bytes, cs.map { case (n, s) => keyOf.getOrElse(n, n) -> s })
-    }, cs0)
+    Staged(written.map(a =>
+      a.copy(stats = a.stats.map { case (n, s) => keyOf.getOrElse(n, n) -> s })), cs0)
   }
 
   /** Unwind a freshly-cloned/created table after a failed catalog
@@ -2638,10 +2618,13 @@ object GraftLake {
     * given up; the latest snapshot is untouched). Returns files deleted.
     *
     * `minAgeMillis` is the concurrent-writer guard (the retention
-    * threshold of the Delta paper): a LIVE writer has a window between
-    * moving files into data/ and winning its commit where those files
-    * look like orphans — vacuum must only reclaim debris old enough that
-    * no in-flight commit can still reference it. Tombstoned files are
+    * threshold of the Delta paper): a LIVE writer's tasks write straight
+    * into data/ ([[DataFileWriter]]), so from a file's close until the
+    * writer wins its commit that file looks like an orphan — vacuum must
+    * only reclaim debris old enough that no in-flight commit can still
+    * reference it (the guard must exceed the longest write job plus its
+    * commit). The same pass reclaims what a failed or speculative task
+    * attempt left behind on a real cluster. Tombstoned files are
     * age-gated too (an old snapshot's reader may still be scanning them).
     */
   def vacuum(spark: SparkSession, dir: String, keepHistory: Boolean = true,
@@ -2663,7 +2646,8 @@ object GraftLake {
       vacuumDoomed(spark, dir, keepHistory, minAgeMillis, now)
     doomed.foreach(rel => new File(dir, rel).delete())
     doomedDv.foreach(rel => new File(dir, rel).delete())
-    // sweep abandoned staging dirs under the same age guard
+    // tables written before data files were written in place can hold
+    // `_staged/<uuid>` debris: sweep it under the same age guard
     Option(new File(dir, "_staged").listFiles()).getOrElse(Array.empty)
       .filter(_.lastModified() <= now - minAgeMillis).foreach(deleteRecursively)
     doomed.size + doomedDv.size

@@ -65,3 +65,32 @@ object GraftDatasetBridge {
       cdf.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 }
+
+/** Access bridge for the `private[sql]` schema checks Spark's file-source
+  * write path runs before it writes a row (`DataSource.planForWriting`,
+  * `InsertIntoHadoopFsRelationCommand`, `FileFormatWriter`). The lake
+  * writes its data files without that path, so it runs the same checks,
+  * in the same order, through here: a batch Spark would refuse fails
+  * with Spark's own error. */
+object GraftWriteBridge {
+  def checkWritable(spark: SparkSession,
+      format: execution.datasources.FileFormat,
+      schema: types.StructType): Unit = {
+    val conf = spark.sessionState.conf
+    val name = format.toString
+    // DataSource.planForWriting: CalendarInterval columns, empty schemas
+    schema.foreach(f => catalyst.util.TypeUtils.invokeOnceForInterval(
+      f.dataType, forbidAnsiIntervals = false)(
+      throw errors.QueryCompilationErrors.dataTypeUnsupportedByDataSourceError(name, f)))
+    execution.datasources.DataSource.validateSchema(name, schema, conf)
+    // InsertIntoHadoopFsRelationCommand: duplicate names, collated map keys
+    if (!format.allowDuplicatedColumnNames)
+      util.SchemaUtils.checkColumnNameDuplication(
+        schema.fieldNames.toSeq, conf.caseSensitiveAnalysis)
+    if (!conf.allowCollationsInMapKeys)
+      util.SchemaUtils.checkNoCollationsInMapKeys(schema)
+    // FileFormatWriter: types the format cannot store, field names
+    execution.datasources.DataSourceUtils.verifySchema(format, schema)
+    execution.datasources.DataSourceUtils.checkFieldNames(format, schema)
+  }
+}

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.spark.LocalCheckpoint
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -102,6 +103,34 @@ class GraphSpec extends SparkSpec {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
     // k=4: nothing has degree 4 → empty
     assert(Graph.kCore(edges, "src", "dst", k = 4).isEmpty)
+  }
+
+  test("kCore and bfsHops each leave one localCheckpoint, the result's, " +
+      "on a 200-edge graph") {
+    // K20 minus one edge (189 edges) plus an 11-edge chain 110→…→100→0:
+    // kCore peels the chain one node a round, bfsHops walks it one hop a
+    // round, so both run a dozen checkpointed rounds
+    val clique = (for (i <- 0L until 20L; j <- i + 1 until 20L) yield (i, j)).take(189)
+    val chain = (100L until 110L).map(i => (i + 1, i)) :+ ((100L, 0L))
+    val edges = (clique ++ chain).toDF("src", "dst")
+    assert(edges.count() == 200)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val core = Graph.kCore(edges, "src", "dst", k = 2)
+    assert(core.count() == 20)
+    val afterCore = sc.getPersistentRDDs.keySet
+    assert((afterCore -- before).size <= 1,
+      s"kCore holds ${(afterCore -- before).size} persisted RDDs")
+    val reached = Graph.bfsHops(edges, Seq(110L).toDF("id"), "src", "dst",
+      "id", maxHops = 15)
+    assert(reached.count() == 31)
+    val afterBfs = sc.getPersistentRDDs.keySet
+    assert((afterBfs -- afterCore).size <= 1,
+      s"bfsHops holds ${(afterBfs -- afterCore).size} persisted RDDs")
+    // what is left is the caller's to release
+    LocalCheckpoint.release(core)
+    LocalCheckpoint.release(reached)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("rootDepths: pointer doubling resolves a deep chain in log rounds; " +
