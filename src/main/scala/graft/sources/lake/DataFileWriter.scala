@@ -3,8 +3,6 @@ package graft.sources.lake
 import java.io.File
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -95,22 +93,6 @@ private[lake] object DataFileWriter {
           .getOrElse(Array.empty[File]).foreach(_.delete())
         throw t
     } finally conf.destroy()
-  }
-
-  /** A Hadoop conf as its key/value pairs, rebuilt once per executor
-    * (the lazy value is shared by that executor's tasks). `Configuration`'s
-    * own serialisation, which `SerializableWritable` uses, gzips every
-    * key's source list: for a session conf of ~1,100 keys that took
-    * ~17 ms to broadcast and ~19 ms to read back, against ~8 ms and ~2 ms
-    * as pairs (spark-shell probe, `local[4]`, C1 only, 4-vCPU VM). */
-  private final class ConfPairs(conf: Configuration) extends Serializable {
-    private val pairs: Array[String] =
-      conf.iterator.asScala.flatMap(e => Iterator(e.getKey, e.getValue)).toArray
-    @transient lazy val value: Configuration = {
-      val c = new Configuration(false)
-      for (i <- pairs.indices by 2) c.set(pairs(i), pairs(i + 1))
-      c
-    }
   }
 
   /** Write one partition's rows to a fresh file under `target` and

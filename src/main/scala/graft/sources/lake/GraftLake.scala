@@ -10,7 +10,6 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.spark.LocalCheckpoint
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -36,21 +35,24 @@ import org.apache.spark.sql.types.{StructField, StructType}
  *  3. `Files.createLink(_log/v<N+1>.json, tmp)` — hard-link creation is
  *     atomic and fails if the destination exists, so exactly one writer
  *     wins version N+1 and the linked file is complete by construction
- *     (no reader can observe a partial commit). Losers reload the log,
- *     RECOMPUTE their actions against the new snapshot, and retry at the
- *     next version — recompute-under-the-fence makes delete/merge
- *     serializable without any conflict matrix.
+ *     (no reader can observe a partial commit). A loser deletes the
+ *     files its attempt wrote (data files and DV sidecars), reloads the
+ *     log, RECOMPUTES its actions against the new snapshot, and retries
+ *     at the next version — recompute-under-the-fence makes delete/merge
+ *     serializable without any conflict matrix. Files written once before
+ *     the loop (append, overwrite, replace, stream epochs) are kept for
+ *     the retry and deleted if the write ends without a commit.
  *
  * A crash anywhere before step 3 leaves only unreferenced data/tmp files;
  * readers never see them and [[vacuum]] reclaims them. On HDFS/object
  * stores the same fence is `FileSystem.create(path, overwrite = false)`.
  *
- * Per-file column stats (min/max/nullCount) are read from the parquet
- * FOOTERS at commit time — no data scan — and drive file pruning in
- * [[scanRange]]/[[scanEq]]: at 100 TB the log + stats are the KB-sized
- * planning object and a selective range scan opens only the overlapping
- * files. Footer reads are distributed over executors when a commit
- * references many files.
+ * Per-file column stats (min/max/nullCount) come from the parquet
+ * FOOTERS — the task that writes a file reads its own footer before it
+ * returns ([[DataFileWriter]]), so there is no data scan and no
+ * driver-side read — and drive file pruning in [[scanRange]]/[[scanEq]]:
+ * at 100 TB the log + stats are the KB-sized planning object and a
+ * selective range scan opens only the overlapping files.
  *
  * Exactly-once streaming append: [[appendStreamBatch]] stamps the commit
  * with (appId, epochId); a replayed foreachBatch epoch finds its txn in
@@ -563,10 +565,13 @@ object GraftLake {
     * list is large. */
   private[lake] def footerStats(spark: SparkSession,
       paths: Seq[String]): Map[String, (Long, Long, Map[String, ColStats])] = {
-    val conf = new SerializableWritable(spark.sessionState.newHadoopConf())
-    if (paths.size <= 16) paths.map(p => p -> ParquetFooter.stats(p, conf.value)).toMap
-    else spark.sparkContext.parallelize(paths, math.min(paths.size, 64))
-      .map(p => p -> ParquetFooter.stats(p, conf.value)).collect().toMap
+    val conf = spark.sessionState.newHadoopConf()
+    if (paths.size <= 16) paths.map(p => p -> ParquetFooter.stats(p, conf)).toMap
+    else {
+      val pairs = new ConfPairs(conf)
+      spark.sparkContext.parallelize(paths, math.min(paths.size, 64))
+        .map(p => p -> ParquetFooter.stats(p, pairs.value)).collect().toMap
+    }
   }
 
   /** Table-level per-column (kind, min, max, nullCount) folded from the
@@ -852,15 +857,6 @@ object GraftLake {
           "were set concurrently after this batch was validated; retry the write")
   }
 
-  /** On a thrown commit (contention or constraint conflict), staged
-    * files were never referenced by any log version — delete them so a
-    * failed pre-staged write leaves no orphans for VACUUM to find. */
-  private def discardOnThrow[A](dir: String, adds: Seq[AddFile])(body: => A): A =
-    try body catch {
-      case e: Throwable =>
-        adds.foreach(a => new File(dir, a.path).delete()); throw e
-    }
-
   /** Write `df` as parquet files into `data/`, validated against and
     * carrying the blooms of `stageSnap` — the caller's already-folded
     * snapshot (None only for a table that has no version yet). A
@@ -937,21 +933,17 @@ object GraftLake {
     require(!versionFile(dir, 0).exists(), s"lake table already exists: $dir")
     val schema = assignIds(df.schema)
     val adds = stage(df, dir, numFiles, schema, None).adds
-    val c = Commit(0L, System.currentTimeMillis(), "create", None, None,
+    commitVersion0(dir, Commit(0L, System.currentTimeMillis(), "create", None, None,
       Some(schema.json), adds, Nil, ckptEvery = Some(checkpointEvery),
-      maxColId = Some(schema.fields.length))
-    if (!tryCommit(dir, c))
-      throw new LakeContentionException(s"concurrent create at $dir")
-    0L
+      maxColId = Some(schema.fields.length)), written = adds.map(_.path))
   }
 
   /** CONVERT an existing parquet directory into a lake table IN PLACE,
     * zero data rewrite (the CONVERT TO DELTA migration shape): list the
     * parquet files, read their FOOTERS for rows/bytes/min-max
-    * (distributed over executors when the list is large — the same
-    * machinery every commit uses), and commit v0 referencing the files
-    * where they already are. At 100 TB this is the adoption path:
-    * metadata-only, cost ∝ file COUNT, never data volume.
+    * (distributed over executors when the list is large), and commit v0
+    * referencing the files where they already are. At 100 TB this is the
+    * adoption path: metadata-only, cost ∝ file COUNT, never data volume.
     *
     * The adopted schema carries NO field ids (the files were written
     * without them), so the table starts name-keyed — Spark's field-id
@@ -989,12 +981,9 @@ object GraftLake {
       val (rows, bytes, cs) = stats(s"$dir/$rel")
       AddFile(rel, rows, bytes, cs)
     }
-    val c = Commit(0L, System.currentTimeMillis(), "convert", None, None,
+    commitVersion0(dir, Commit(0L, System.currentTimeMillis(), "convert", None, None,
       Some(schema.json), adds, Nil, ckptEvery = Some(checkpointEvery),
-      maxColId = Some(0))
-    if (!tryCommit(dir, c))
-      throw new LakeContentionException(s"concurrent create at $dir")
-    0L
+      maxColId = Some(0)))
   }
 
   /** SHALLOW CLONE: a new lake table whose v0 commit references the
@@ -1025,14 +1014,11 @@ object GraftLake {
     }
     val props: Seq[(String, Option[String])] =
       snap.props.toSeq.map { case (k, v) => k -> Some(v) }
-    val c = Commit(0L, System.currentTimeMillis(), "clone", None, None,
+    commitVersion0(dstDir, Commit(0L, System.currentTimeMillis(), "clone", None, None,
       Some(snap.schema.json), adds, Nil, ckptEvery = Some(checkpointEvery),
       maxColId = Some(snap.maxColId),
       retiredNames = snap.retired.toSeq,
-      props = props, clusterBounds = snap.clusterBounds)
-    if (!tryCommit(dstDir, c))
-      throw new LakeContentionException(s"concurrent create at $dstDir")
-    0L
+      props = props, clusterBounds = snap.clusterBounds))
   }
 
   /** Append-only commit; never conflicts, so losers just re-fence at the
@@ -1054,15 +1040,15 @@ object GraftLake {
     }
     val batch = stage(staged, dir, numFiles, merged0, Some(pre))
     val adds = batch.adds
-    val (v, committed) = discardOnThrow(dir, adds) { retry(dir, "append", Some(pre)) { snap =>
+    val (v, base) = fence(dir, "append", Some(pre), adds) { snap =>
       fenceConstraints(batch, snap, "append")
       val merged = mergedUnderFence(snap, df.schema, merged0, "append")
       val schemaJson = if (merged == snap.schema) None else Some(merged.json)
-      Some((Commit(snap.version + 1, System.currentTimeMillis(), "append",
+      Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "append",
         None, None, schemaJson, adds, Nil,
-        maxColId = Some(maxIdOf(merged, snap.maxColId))), (snap.version + 1, snap)))
-    } }.get
-    maybeAutoCompact(spark, dir, committed, adds)
+        maxColId = Some(maxIdOf(merged, snap.maxColId)))))
+    }.get
+    maybeAutoCompact(spark, dir, base, adds)
     v
   }
 
@@ -1133,14 +1119,14 @@ object GraftLake {
     val merged0 = mergeSchemas(pre.schema, df.schema, pre.maxColId, pre.retired)
     val batch = stage(df, dir, numFiles, merged0, Some(pre))
     val adds = batch.adds
-    discardOnThrow(dir, adds) { retry(dir, "overwrite", Some(pre)) { snap =>
+    fence(dir, "overwrite", Some(pre), adds) { snap =>
       fenceConstraints(batch, snap, "overwrite")
       val merged = mergedUnderFence(snap, df.schema, merged0, "overwrite")
       val schemaJson = if (merged == snap.schema) None else Some(merged.json)
-      Some((Commit(snap.version + 1, System.currentTimeMillis(), "overwrite",
+      Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "overwrite",
         None, None, schemaJson, adds, snap.files.map(_.path),
-        maxColId = Some(maxIdOf(merged, snap.maxColId))), snap.version + 1))
-    } }.get
+        maxColId = Some(maxIdOf(merged, snap.maxColId)))))
+    }.get._1
   }
 
   /** CREATE OR REPLACE TABLE ... AS SELECT: ONE atomic commit that
@@ -1161,7 +1147,7 @@ object GraftLake {
     })
     val batch = stage(df, dir, numFiles, schema, Some(pre))
     val adds = batch.adds
-    discardOnThrow(dir, adds) { retry(dir, "replace", Some(pre)) { snap =>
+    fence(dir, "replace", Some(pre), adds) { snap =>
       fenceConstraints(batch, snap, "replace")
       if (snap.maxColId >= firstId)
         throw new LakeContentionException(
@@ -1186,13 +1172,12 @@ object GraftLake {
           snap.props.keys.filter(k => k.startsWith(BloomNdvPrefix) &&
             !schema.fieldNames.contains(k.stripPrefix(BloomNdvPrefix)))
             .map(_ -> None).toSeq
-      Some((Commit(snap.version + 1, System.currentTimeMillis(), "replace",
+      Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "replace",
         None, None, Some(schema.json), adds, snap.files.map(_.path),
         maxColId = Some(firstId + df.schema.fields.length - 1),
         props = danglingCluster ++ danglingBloom,
-        clusterBounds = if (snap.clusterBounds.isDefined) Some("") else None),
-        snap.version + 1))
-    } }.get
+        clusterBounds = if (snap.clusterBounds.isDefined) Some("") else None)))
+    }.get._1
   }
 
   /** Copy-on-write UPDATE: rows matching `predicate` get each `set`
@@ -1200,23 +1185,28 @@ object GraftLake {
     * row, SQL UPDATE semantics); only stat-overlapping files rewrite.
     * Values are cast to the column's declared type. */
   def update(spark: SparkSession, dir: String, predicate: Column,
-      set: Seq[(String, Column)]): Long = {
-    rewrite(spark, dir, "update", predicate) { (hit, snap) =>
-      val byName = set.toMap
-      set.foreach { case (name, _) =>
-        require(snap.schema.fieldNames.contains(name),
-          s"UPDATE sets unknown column '$name'")
-      }
-      val matched = coalesce(predicate, lit(false))
-      hit.select(snap.schema.fields.toIndexedSeq.map { f =>
-        byName.get(f.name) match {
-          case Some(v) =>
-            when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
+      set: Seq[(String, Column)]): Long =
+    fence(dir, "update") { snap =>
+      val hit = overlapping(snap, predicate)
+      if (hit.isEmpty) None
+      else {
+        val byName = set.toMap
+        set.foreach { case (name, _) =>
+          require(snap.schema.fieldNames.contains(name),
+            s"UPDATE sets unknown column '$name'")
         }
-      }: _*)
-    }
-  }
+        val matched = coalesce(predicate, lit(false))
+        val rows = readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
+          .select(snap.schema.fields.toIndexedSeq.map { f =>
+            byName.get(f.name) match {
+              case Some(v) =>
+                when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+              case None => col(f.name)
+            }
+          }: _*)
+        Some(rewriteAttempt(snap, "update", hit, rows))
+      }
+    }.fold(latestVersion(dir))(_._1)
 
   /** Exactly-once streaming append: the log tracks each appId's
     * high-water epoch (carried through checkpoints, so the fence survives
@@ -1237,19 +1227,16 @@ object GraftLake {
     }
     val batch = stage(staged, dir, numFiles, pre.schema, Some(pre))
     val adds = batch.adds
-    val committed = discardOnThrow(dir, adds) { retry(dir, "stream-append", Some(pre)) { snap =>
+    val committed = fence(dir, "stream-append", Some(pre), adds) { snap =>
       fenceConstraints(batch, snap, "stream-append")
       // re-check under the fence: a racing attempt of the SAME epoch may
       // have won a version while we staged
       if (fenced(snap)) None
       else
-        Some((Commit(snap.version + 1, System.currentTimeMillis(), "stream-append",
-          Some(appId), Some(epochId), None, adds, Nil), snap))
-    } }
-    committed match {
-      case None => adds.foreach(a => new File(dir, a.path).delete())
-      case Some(base) => maybeAutoCompact(df.sparkSession, dir, base, adds)
+        Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "stream-append",
+          Some(appId), Some(epochId), None, adds, Nil)))
     }
+    committed.foreach { case (_, base) => maybeAutoCompact(df.sparkSession, dir, base, adds) }
     committed.isDefined
   }
 
@@ -1258,9 +1245,13 @@ object GraftLake {
     * The rewrite is recomputed from the latest snapshot on every fence
     * retry, so concurrent appends are never lost. */
   def delete(spark: SparkSession, dir: String, predicate: Column): Long =
-    rewrite(spark, dir, "delete", predicate) { (hit, _) =>
-      hit.filter(!coalesce(predicate, lit(false)))
-    }
+    fence(dir, "delete") { snap =>
+      val hit = overlapping(snap, predicate)
+      if (hit.isEmpty) None
+      else Some(rewriteAttempt(snap, "delete", hit,
+        readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
+          .filter(!coalesce(predicate, lit(false)))))
+    }.fold(latestVersion(dir))(_._1)
 
   /** Merge-on-read DELETE — deletion vectors instead of copy-on-write:
     * matched rows are recorded as `_metadata.row_index` positions in a
@@ -1286,7 +1277,7 @@ object GraftLake {
     * sound superset); [[optimize]] treats DV-carrying files as rewrite
     * candidates, which purges the vectors back out of the steady state. */
   def deleteMoR(spark: SparkSession, dir: String, predicate: Column): Long =
-    retry(dir, "delete-mor") { snap =>
+    fence(dir, "delete-mor") { snap =>
       val hit = overlapping(snap, predicate)
       if (hit.isEmpty) None
       else {
@@ -1296,12 +1287,12 @@ object GraftLake {
           val (rm, dvAdds) = dvGrow(dir,
             hit.map(f => baseName(f.path) -> f).toMap, marked)
           if (rm.isEmpty) None
-          else Some((Commit(snap.version + 1, System.currentTimeMillis(),
+          else Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(),
             "delete-mor", None, None, None, dvAdds, rm),
-            snap.version + 1))
+            dvAdds.flatMap(_.dv.map(_.path))))
         }
       }
-    }.getOrElse(latestVersion(dir))
+    }.fold(latestVersion(dir))(_._1)
 
   /** Merge-on-read UPDATE — the DV twin of [[update]]: matched rows are
     * marked deleted in their files' deletion vectors and their UPDATED
@@ -1315,7 +1306,7 @@ object GraftLake {
     * both the DV and the new files back, OPTIMIZE purges the vectors. */
   def updateMoR(spark: SparkSession, dir: String, predicate: Column,
       set: Seq[(String, Column)]): Long =
-    retry(dir, "update-mor") { snap =>
+    fence(dir, "update-mor") { snap =>
       set.foreach { case (name, _) =>
         require(snap.schema.fieldNames.contains(name),
           s"UPDATE sets unknown column '$name'")
@@ -1339,12 +1330,12 @@ object GraftLake {
                 .getOrElse(col(fld.name))
             }: _*)
           val newAdds = stage(updated, dir, 0, snap.schema, Some(snap)).adds
-          Some((Commit(snap.version + 1, System.currentTimeMillis(),
+          Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(),
             "update-mor", None, None, None, dvAdds ++ newAdds, rm),
-            snap.version + 1))
+            dvAdds.flatMap(_.dv.map(_.path)) ++ newAdds.map(_.path)))
         }
       }
-    }.getOrElse(latestVersion(dir))
+    }.fold(latestVersion(dir))(_._1)
 
   /** Scan `files` exposing per-row (`__gl_file` = basename, `__gl_pos` =
     * row index) alongside `schema`'s columns, with already-deleted
@@ -1470,30 +1461,44 @@ object GraftLake {
       // uniqueness — reject instead
       require(nKeys == n,
         s"merge updates contain duplicate '$key' values ($n rows, $nKeys keys)")
-      retryRewrite(spark, dir, "merge") { snap =>
-        val candidates = snap.files.filter { f =>
-          f.stats.get(statsKey(snap.schema, key)) match {
-            case Some(st) if st.min.isDefined && st.max.isDefined =>
-              (lo, hi) match {
-                case (Some(l), Some(h)) =>
-                  (for {
-                    c1 <- cmpOpt(st.kind, st.max.get, l.toString)
-                    c2 <- cmpOpt(st.kind, st.min.get, h.toString)
-                  } yield c1 >= 0 && c2 <= 0).getOrElse(true)
-                case _ => true
-              }
-            case _ => true // no stats — must assume it can hold the key
-          }
-        }
+      fence(dir, "merge") { snap =>
+        val candidates = rangeCandidates(snap.files, statsKey(snap.schema, key), lo, hi)
         val base =
           if (candidates.isEmpty) emptyDf(spark, snap.schema)
           else readFiles(spark, snap, candidates.map(f => absPath(dir, f.path)))
         val rewritten = base.join(upd.select(col(key)).distinct(), Seq(key), "left_anti")
           .unionByName(upd, allowMissingColumns = true)
-        (candidates, rewritten)
-      }
+        // commits even with no candidate: the updates are all inserts
+        Some(rewriteAttempt(snap, "merge", candidates, rewritten))
+      }.get._1
     } finally { upd.unpersist(); () }
   }
+
+  /** Files whose footer stats under `key` cannot rule out a value in
+    * [lo, hi] — the stats prune of [[scanRange]], [[merge]] and the MERGE
+    * INTO planner. Conservative: a file without stats, a bound that does
+    * not parse against the stats kind, or an unknown range (an empty or
+    * all-null merge source) keeps the file; a file without bounds is
+    * skipped only when it is provably all-null, since null matches no
+    * range and no key. */
+  private def rangeCandidates(files: Seq[AddFile], key: String,
+      lo: Option[Any], hi: Option[Any]): Seq[AddFile] =
+    (lo, hi) match {
+      case (Some(l), Some(h)) =>
+        files.filter { f =>
+          f.stats.get(key) match {
+            case Some(st) if st.min.isEmpty || st.max.isEmpty =>
+              !(st.nullCount >= 0 && st.nullCount == f.rows)
+            case Some(st) =>
+              (for {
+                c1 <- cmpOpt(st.kind, st.max.get, l.toString)
+                c2 <- cmpOpt(st.kind, st.min.get, h.toString)
+              } yield c1 >= 0 && c2 <= 0).getOrElse(true)
+            case None => true
+          }
+        }
+      case _ => files
+    }
 
   // ── general MERGE INTO (SQL MERGE semantics) ─────────────────────────
 
@@ -1613,164 +1618,52 @@ object GraftLake {
       condition: Column, matched: Seq[MatchedClause],
       notMatched: Seq[NotMatchedInsert],
       notMatchedBySource: Seq[MatchedClause] = Nil,
-      newColumns: Seq[StructField] = Nil): Long = {
-    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
-      "MERGE INTO needs at least one WHEN clause")
-    val src = source.cache()
-    // one agg per distinct equi source column across fence retries:
-    // (min, max, rows, distinct keys) — bounds drive the stats prune,
-    // rows==distinct proves each target row can match at most ONE source
-    // row (extra conjuncts only ever REMOVE matches), which lets the
-    // ambiguity window — a whole extra shuffle of victims × source — be
-    // skipped in the dominant unique-key-merge case
-    val srcAgg = scala.collection.mutable.Map.empty[String, (Option[Any], Option[Any], Long, Long)]
-    def aggOf(sCol: String): (Option[Any], Option[Any], Long, Long) =
-      srcAgg.getOrElseUpdate(sCol, {
-        val r = src.agg(min(col(sCol)), max(col(sCol)), count(lit(1)),
-          count_distinct(col(sCol))).collect()(0)
-        (Option(r.get(0)), Option(r.get(1)), r.getLong(2), r.getLong(3))
-      })
-    try {
-      retryRewriteEvolving(spark, dir, "merge-into") { snap =>
-        // schema evolution, recomputed under the fence each attempt (a
-        // racing commit may have advanced the id space or already added
-        // the column — mergeSchemas dedups by name, type-checked)
-        val evolved =
-          if (newColumns.isEmpty) snap.schema
-          else mergeSchemas(snap.schema, StructType(newColumns.toArray),
-            snap.maxColId, snap.retired)
-        val snapE = snap.copy(schema = evolved,
-          maxColId = maxIdOf(evolved, snap.maxColId))
-        val schemaOut = if (evolved == snap.schema) None else Some(evolved)
-        val fields = evolved.fields.toIndexedSeq
-        val ch = MergeChains(fields, matched, notMatched, notMatchedBySource)
-        ch.validate()
-
-        val equi = mergeEquiCol(spark, snapE, src, condition)
-        val uniqueMatch = equi.exists { case (_, sCol) =>
-          val (_, _, n, d) = aggOf(sCol); n == d
-        }
-
-        // stats-pruned candidates: files that MAY hold a source-matched
-        // row per the first equi-conjunct's source bounds (conservative —
-        // a key outside the candidates provably isn't in the table)
-        val cand: Seq[AddFile] = equi match {
-          case Some((tCol, sCol)) =>
-            val (lo, hi, _, _) = aggOf(sCol)
-            (lo, hi) match {
-              case (Some(l), Some(h)) =>
-                snap.files.filter { f =>
-                  f.stats.get(statsKey(evolved, tCol)) match {
-                    case Some(st) if st.min.isDefined && st.max.isDefined =>
-                      (for {
-                        c1 <- cmpOpt(st.kind, st.max.get, l.toString)
-                        c2 <- cmpOpt(st.kind, st.min.get, h.toString)
-                      } yield c1 >= 0 && c2 <= 0).getOrElse(true)
-                    case _ => true
-                  }
-                }
-              case _ => snap.files // all-null or empty source keys
-            }
-          case None => snap.files
-        }
-
-        def expand(df: DataFrame): DataFrame =
-          df.where(col("__gl_r").isNotNull).select("__gl_r.*")
-
+      newColumns: Seq[StructField] = Nil): Long =
+    fenceMerge(spark, dir, "merge-into", source, condition, matched, notMatched,
+        notMatchedBySource, newColumns) { p =>
+      val ch = p.ch
+      val (victims, rows) =
         if (matched.isEmpty && notMatchedBySource.isEmpty) {
           // ── INSERT-ONLY fast path: nothing matched is rewritten, so no
           // victims, no ambiguity guard (duplicate matches are legal —
           // they just suppress the insert), and the commit is adds-only.
           // The anti-join target is the stats-pruned candidate set: any
           // target row a source row could match lives there.
-          val tgt =
-            if (cand.isEmpty) emptyDf(spark, evolved)
-            else readFiles(spark, snapE, cand.map(f => absPath(dir, f.path)))
-          val inserts = src.alias("s").join(tgt.alias("t"), condition, "left_anti")
-            .select(ch.insertChain.as("__gl_r"))
-          (Nil, expand(inserts), schemaOut, None, None)
+          (Nil, p.expand(p.src.alias("s").join(p.read(p.cand).alias("t"), condition, "left_anti")
+            .select(ch.insertChain.as("__gl_r"))))
+        } else if (matched.isEmpty) {
+          // ── not-matched-by-source WITHOUT matched clauses: matched
+          // target rows are untouched — keep them via LEFT SEMI (once
+          // each; the full-outer chain would emit one copy per source
+          // match), unmatched target rows run the nmbs chain via LEFT
+          // ANTI, inserts come from the source-side anti-join. Three
+          // joins, each semi/anti (broadcastable small source), no
+          // window — multiple matches are semantically irrelevant here.
+          val tgt = p.read(p.victims)
+          val kept = tgt.alias("t").join(p.src.alias("s"), condition, "left_semi")
+            .select(ch.fields.map(f => col(f.name)): _*)
+          val nmbsRows = p.expand(
+            tgt.alias("t").join(p.src.alias("s"), condition, "left_anti")
+              .alias("t").select(ch.chain(notMatchedBySource).as("__gl_r")))
+          val inserts =
+            if (notMatched.isEmpty) emptyDf(spark, p.evolved)
+            else p.expand(
+              p.src.alias("s").join(tgt.alias("t"), condition, "left_anti")
+                .select(ch.insertChain.as("__gl_r")))
+          (p.victims, kept.unionByName(nmbsRows).unionByName(inserts))
         } else {
-          // phase 1: victim files. Stats-prune candidates on the first
-          // target=source equi-conjunct's source bounds, then the exact
-          // touched set via an input_file_name semi-join (candidate files
-          // only are scanned; the semi-join broadcasts a small source).
-          val victims: Seq[AddFile] =
-            if (notMatchedBySource.nonEmpty) snap.files
-            else if (cand.isEmpty) Nil
-            else {
-              val touched = readFiles(spark, snapE, cand.map(f => absPath(dir, f.path)))
-                .withColumn("__gl_file", input_file_name()).alias("t")
-                .join(src.alias("s"), condition, "left_semi")
-                .select(col("__gl_file")).distinct()
-                .collect().map(r => baseName(r.getString(0))).toSet
-              cand.filter(f => touched.contains(baseName(f.path)))
-            }
-
-          val tgt0 =
-            if (victims.isEmpty) emptyDf(spark, evolved)
-            else readFiles(spark, snapE, victims.map(f => absPath(dir, f.path)))
-
-          if (matched.isEmpty) {
-            // ── not-matched-by-source WITHOUT matched clauses: matched
-            // target rows are untouched — keep them via LEFT SEMI (once
-            // each; the full-outer chain would emit one copy per source
-            // match), unmatched target rows run the nmbs chain via LEFT
-            // ANTI, inserts come from the source-side anti-join. Three
-            // joins, each semi/anti (broadcastable small source), no
-            // window — multiple matches are semantically irrelevant here.
-            val kept = tgt0.alias("t").join(src.alias("s"), condition, "left_semi")
-              .select(fields.map(f => col(f.name)): _*)
-            val nmbsRows = expand(
-              tgt0.alias("t").join(src.alias("s"), condition, "left_anti")
-                .alias("t").select(ch.chain(notMatchedBySource).as("__gl_r")))
-            val inserts =
-              if (notMatched.isEmpty) emptyDf(spark, evolved)
-              else expand(
-                src.alias("s").join(tgt0.alias("t"), condition, "left_anti")
-                  .select(ch.insertChain.as("__gl_r")))
-            (victims, kept.unionByName(nmbsRows).unionByName(inserts), schemaOut, None, None)
-          } else {
-            // phase 2: one full-outer join of victims × source, projected
-            // through the clause chains in a single pass.
-            val t = tgt0.withColumn("__gl_tid", monotonically_increasing_id()).alias("t")
-            val s2 = src.withColumn("__gl_sid", monotonically_increasing_id()).alias("s")
-            val joined = t.join(s2, condition, "full_outer")
-            val isMatched = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNotNull
-
-            // ambiguity guard: >1 source match for one target row while a
-            // matched clause exists is nondeterministic — reject. Skipped
-            // when the equi key is distinct in the source (each target row
-            // then matches at most once — the window's shuffle of victims ×
-            // source is pure cost). Unmatched source rows get their own
-            // window partition via sid (a shared null-tid partition would
-            // serialize every insert through one task).
-            val guarded =
-              if (uniqueMatch) joined
-              else {
-                val w = org.apache.spark.sql.expressions.Window.partitionBy(
-                  col("t.__gl_tid"),
-                  when(col("t.__gl_tid").isNull, col("s.__gl_sid")).otherwise(lit(0L)))
-                joined
-                  .withColumn("__gl_n", sum(when(isMatched, 1L).otherwise(0L)).over(w))
-                  .where(when(isMatched && col("__gl_n") > 1L,
-                    assert_true(lit(false), lit(s"MERGE INTO $dir: a target row " +
-                      "matched multiple source rows; make the ON condition more " +
-                      "selective or deduplicate the source")).isNotNull)
-                    .otherwise(lit(true)))
-              }
-
-            val result = when(isMatched, ch.chain(matched))
-              .when(col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNull,
-                if (notMatchedBySource.isEmpty) ch.keepStruct
-                else ch.chain(notMatchedBySource))
-              .otherwise(ch.insertChain)
-            val replacement = expand(guarded.select(result.as("__gl_r")))
-            (victims, replacement, schemaOut, None, None)
-          }
+          // the joined rows projected through the clause chains in a
+          // single pass
+          val result = when(p.isMatched, ch.chain(matched))
+            .when(p.targetOnly,
+              if (notMatchedBySource.isEmpty) ch.keepStruct
+              else ch.chain(notMatchedBySource))
+            .otherwise(ch.insertChain)
+          (p.victims, p.expand(p.joined(p.read(p.victims)).select(result.as("__gl_r"))))
         }
-      }
-    } finally { src.unpersist(); () }
-  }
+      // commits even with no victim: an insert-only merge is adds-only
+      Some(rewriteAttempt(p.snap, "merge-into", victims, rows, p.schemaOut))
+    }
 
   /** Merge-on-read MERGE INTO — the deletion-vector twin of [[mergeInto]]
     * (Delta's DV merge): target rows a clause actually FIRES on are
@@ -1787,11 +1680,63 @@ object GraftLake {
       condition: Column, matched: Seq[MatchedClause],
       notMatched: Seq[NotMatchedInsert],
       notMatchedBySource: Seq[MatchedClause] = Nil,
-      newColumns: Seq[StructField] = Nil): Long = {
+      newColumns: Seq[StructField] = Nil): Long =
     if (matched.isEmpty && notMatchedBySource.isEmpty)
-      return mergeInto(spark, dir, source, condition, matched, notMatched,
+      mergeInto(spark, dir, source, condition, matched, notMatched,
         notMatchedBySource, newColumns)
+    else fenceMerge(spark, dir, "merge-mor", source, condition, matched, notMatched,
+        notMatchedBySource, newColumns) { p =>
+      val ch = p.ch
+      // target = victim files' LIVE rows WITH physical positions
+      // (clean/DV split scan, per-file descriptors in the FileIndex)
+      val joined = p.joined(scanWithPositions(spark, p.snapE, p.victims, p.evolved))
+      // touched = a clause actually fires; untouched rows keep their
+      // physical place (that is the whole point of merge-on-read)
+      val firesMatched = p.isMatched && ch.fired(matched)
+      val firesNmbs = p.targetOnly && ch.fired(notMatchedBySource)
+      val result = when(firesMatched, ch.chain(matched))
+        .when(firesNmbs, ch.chain(notMatchedBySource))
+        .when(col("t.__gl_tid").isNull, ch.insertChain)
+        .otherwise(ch.nullRow)
+      // one join execution feeds both the position bitmaps and the
+      // emitted rows
+      val slim = joined.select(col("t.__gl_file").as("__gl_file"),
+          col("t.__gl_pos").as("__gl_pos"),
+          coalesce(firesMatched || firesNmbs, lit(false)).as("__gl_touched"),
+          result.as("__gl_r"))
+        .localCheckpoint(eager = true)
+      import spark.implicits._
+      // released once staged and vectored, also when this attempt then
+      // loses the fence (the retry re-plans from a fresh snapshot)
+      val (newAdds, rm, dvAdds) = try {
+        val marked = bitmapsOf(slim.where(col("__gl_touched"))
+          .select(col("__gl_file"), col("__gl_pos")).as[(String, Long)])
+        val newAdds = stage(p.expand(slim), dir, 0, p.evolved, Some(p.snap)).adds
+        val (rm, dvAdds) = dvGrow(dir,
+          p.victims.map(f => baseName(f.path) -> f).toMap, marked)
+        (newAdds, rm, dvAdds)
+      } finally LocalCheckpoint.release(slim)
+      Some(Attempt(Commit(p.snap.version + 1, System.currentTimeMillis(),
+        "merge-mor", None, None, p.schemaOut.map(_.json), dvAdds ++ newAdds, rm,
+        maxColId = p.schemaOut.map(maxIdOf(_, p.snap.maxColId))),
+        dvAdds.flatMap(_.dv.map(_.path)) ++ newAdds.map(_.path)))
+    }
+
+  /** The fence loop of both MERGE INTO operators: the source is cached
+    * once per call, and every attempt plans through one [[MergePlan]]. */
+  private def fenceMerge(spark: SparkSession, dir: String, op: String,
+      source: DataFrame, condition: Column, matched: Seq[MatchedClause],
+      notMatched: Seq[NotMatchedInsert], notMatchedBySource: Seq[MatchedClause],
+      newColumns: Seq[StructField])(attempt: MergePlan => Option[Attempt]): Long = {
+    require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
+      "MERGE INTO needs at least one WHEN clause")
     val src = source.cache()
+    // one agg per distinct equi source column across fence retries:
+    // (min, max, rows, distinct keys) — bounds drive the stats prune,
+    // rows==distinct proves each target row can match at most ONE source
+    // row (extra conjuncts only ever REMOVE matches), which lets the
+    // ambiguity window — a whole extra shuffle of victims × source — be
+    // skipped in the dominant unique-key-merge case
     val srcAgg = scala.collection.mutable.Map.empty[String, (Option[Any], Option[Any], Long, Long)]
     def aggOf(sCol: String): (Option[Any], Option[Any], Long, Long) =
       srcAgg.getOrElseUpdate(sCol, {
@@ -1799,114 +1744,108 @@ object GraftLake {
           count_distinct(col(sCol))).collect()(0)
         (Option(r.get(0)), Option(r.get(1)), r.getLong(2), r.getLong(3))
       })
-    try {
-      retry(dir, "merge-mor") { snap =>
-        val evolved =
-          if (newColumns.isEmpty) snap.schema
-          else mergeSchemas(snap.schema, StructType(newColumns.toArray),
-            snap.maxColId, snap.retired)
-        val snapE = snap.copy(schema = evolved,
-          maxColId = maxIdOf(evolved, snap.maxColId))
-        val fields = evolved.fields.toIndexedSeq
-        val ch = MergeChains(fields, matched, notMatched, notMatchedBySource)
-        ch.validate()
+    try fence(dir, op) { snap =>
+      attempt(new MergePlan(spark, snap, src, condition, aggOf, matched,
+        notMatched, notMatchedBySource, newColumns))
+    }.fold(latestVersion(dir))(_._1)
+    finally { src.unpersist(); () }
+  }
 
-        val equi = mergeEquiCol(spark, snapE, src, condition)
-        val uniqueMatch = equi.exists { case (_, sCol) =>
-          val (_, _, n, d) = aggOf(sCol); n == d
-        }
-        // victims as in mergeInto: stats prune + exact semi-join, or the
-        // whole table when not-matched-by-source forces the pass
-        val cand: Seq[AddFile] = equi match {
-          case Some((tCol, sCol)) =>
-            val (lo, hi, _, _) = aggOf(sCol)
-            (lo, hi) match {
-              case (Some(l), Some(h)) =>
-                snap.files.filter { f =>
-                  f.stats.get(statsKey(evolved, tCol)) match {
-                    case Some(st) if st.min.isDefined && st.max.isDefined =>
-                      (for {
-                        c1 <- cmpOpt(st.kind, st.max.get, l.toString)
-                        c2 <- cmpOpt(st.kind, st.min.get, h.toString)
-                      } yield c1 >= 0 && c2 <= 0).getOrElse(true)
-                    case _ => true
-                  }
-                }
-              case _ => snap.files
-            }
-          case None => snap.files
-        }
-        val victims: Seq[AddFile] =
-          if (notMatchedBySource.nonEmpty) snap.files
-          else if (cand.isEmpty) Nil
-          else {
-            val touched = readFiles(spark, snapE, cand.map(f => absPath(dir, f.path)))
-              .withColumn("__gl_file", input_file_name()).alias("t")
-              .join(src.alias("s"), condition, "left_semi")
-              .select(col("__gl_file")).distinct()
-              .collect().map(r => baseName(r.getString(0))).toSet
-            cand.filter(f => touched.contains(baseName(f.path)))
-          }
+  /** What both MERGE INTO operators plan against one snapshot, built
+    * afresh on every fence attempt: the evolved schema, the validated
+    * clause chains, the stats-pruned candidates, the exact victims and
+    * the ambiguity-guarded full outer join. [[mergeInto]] projects the
+    * joined rows into replacement files; [[mergeIntoMoR]] marks touched
+    * positions into DVs and stages only the changed rows. */
+  private final class MergePlan(spark: SparkSession, val snap: Snapshot,
+      val src: DataFrame, condition: Column,
+      aggOf: String => (Option[Any], Option[Any], Long, Long),
+      matched: Seq[MatchedClause], notMatched: Seq[NotMatchedInsert],
+      notMatchedBySource: Seq[MatchedClause], newColumns: Seq[StructField]) {
+    // schema evolution, recomputed under the fence each attempt (a
+    // racing commit may have advanced the id space or already added the
+    // column — mergeSchemas dedups by name, type-checked)
+    val evolved: StructType =
+      if (newColumns.isEmpty) snap.schema
+      else mergeSchemas(snap.schema, StructType(newColumns.toArray),
+        snap.maxColId, snap.retired)
+    val snapE: Snapshot = snap.copy(schema = evolved,
+      maxColId = maxIdOf(evolved, snap.maxColId))
+    /** The schema the commit records — set only when columns were added. */
+    val schemaOut: Option[StructType] = if (evolved == snap.schema) None else Some(evolved)
+    val ch: MergeChains =
+      MergeChains(evolved.fields.toIndexedSeq, matched, notMatched, notMatchedBySource)
+    ch.validate()
 
-        // target = victim files' LIVE rows WITH physical positions
-        // (clean/DV split scan, per-file descriptors in the FileIndex)
-        val tgt = scanWithPositions(spark, snapE, victims, evolved)
-        val t = tgt.withColumn("__gl_tid", monotonically_increasing_id()).alias("t")
-        val s2 = src.withColumn("__gl_sid", monotonically_increasing_id()).alias("s")
-        val joined = t.join(s2, condition, "full_outer")
-        val isMatched = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNotNull
-        val tOnly = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNull
-        val guarded =
-          if (matched.isEmpty || uniqueMatch) joined
-          else {
-            val w = org.apache.spark.sql.expressions.Window.partitionBy(
-              col("t.__gl_tid"),
-              when(col("t.__gl_tid").isNull, col("s.__gl_sid")).otherwise(lit(0L)))
-            joined
-              .withColumn("__gl_n", sum(when(isMatched, 1L).otherwise(0L)).over(w))
-              .where(when(isMatched && col("__gl_n") > 1L,
-                assert_true(lit(false), lit(s"MERGE INTO $dir: a target row " +
-                  "matched multiple source rows; make the ON condition more " +
-                  "selective or deduplicate the source")).isNotNull)
-                .otherwise(lit(true)))
-          }
-        // touched = a clause actually fires; untouched rows keep their
-        // physical place (that is the whole point of merge-on-read)
-        val touchedT = (isMatched && ch.fired(matched)) ||
-          (tOnly && ch.fired(notMatchedBySource))
-        val resultMoR = when(isMatched && ch.fired(matched), ch.chain(matched))
-          .when(tOnly && ch.fired(notMatchedBySource), ch.chain(notMatchedBySource))
-          .when(col("t.__gl_tid").isNull, ch.insertChain)
-          .otherwise(ch.nullRow)
-        // one join execution feeds both the position bitmaps and the
-        // emitted rows
-        val slim = guarded.select(col("t.__gl_file").as("__gl_file"),
-            col("t.__gl_pos").as("__gl_pos"),
-            coalesce(touchedT, lit(false)).as("__gl_touched"),
-            resultMoR.as("__gl_r"))
-          .localCheckpoint(eager = true)
-        import spark.implicits._
-        // released once staged and vectored, also when this attempt then
-        // loses the fence (the retry re-plans from a fresh snapshot)
-        val (newAdds, rm, dvAdds) = try {
-          val marked = bitmapsOf(slim.where(col("__gl_touched"))
-            .select(col("__gl_file"), col("__gl_pos")).as[(String, Long)])
-          val emitted = slim.where(col("__gl_r").isNotNull).select("__gl_r.*")
-          val newAdds = stage(emitted, dir, 0, evolved, Some(snap)).adds
-          val (rm, dvAdds) = dvGrow(dir,
-            victims.map(f => baseName(f.path) -> f).toMap, marked)
-          (newAdds, rm, dvAdds)
-        } finally LocalCheckpoint.release(slim)
-        if (rm.isEmpty && newAdds.isEmpty) None
-        else {
-          val schemaJson = if (evolved == snap.schema) None else Some(evolved.json)
-          Some((Commit(snap.version + 1, System.currentTimeMillis(),
-            "merge-mor", None, None, schemaJson, dvAdds ++ newAdds, rm,
-            maxColId = schemaJson.map(_ => maxIdOf(evolved, snap.maxColId))),
-            snap.version + 1))
-        }
-      }.getOrElse(latestVersion(dir))
-    } finally { src.unpersist(); () }
+    private val equi = mergeEquiCol(spark, snapE, src, condition)
+
+    /** Files that MAY hold a source-matched row per the first
+      * equi-conjunct's source bounds (conservative — a key outside the
+      * candidates provably isn't in the table). */
+    val cand: Seq[AddFile] = equi match {
+      case Some((tCol, sCol)) =>
+        val (lo, hi, _, _) = aggOf(sCol)
+        rangeCandidates(snap.files, statsKey(evolved, tCol), lo, hi)
+      case None => snap.files
+    }
+
+    /** The files PROVABLY holding a matched row: an `input_file_name`
+      * semi-join of the candidates with the source (candidate files only
+      * are scanned; the semi-join broadcasts a small source) — or every
+      * active file when not-matched-by-source clauses force a
+      * whole-table pass. */
+    lazy val victims: Seq[AddFile] =
+      if (notMatchedBySource.nonEmpty) snap.files
+      else if (cand.isEmpty) Nil
+      else {
+        val touched = read(cand)
+          .withColumn("__gl_file", input_file_name()).alias("t")
+          .join(src.alias("s"), condition, "left_semi")
+          .select(col("__gl_file")).distinct()
+          .collect().map(r => baseName(r.getString(0))).toSet
+        cand.filter(f => touched.contains(baseName(f.path)))
+      }
+
+    /** `files`' live rows under the evolved schema. */
+    def read(files: Seq[AddFile]): DataFrame =
+      if (files.isEmpty) emptyDf(spark, evolved)
+      else readFiles(spark, snapE, files.map(f => absPath(snap.dir, f.path)))
+
+    val isMatched: Column = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNotNull
+    val targetOnly: Column = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNull
+
+    /** One full-outer join of `target` × source, aliased `t`/`s`.
+      * Ambiguity guard: >1 source match for one target row while a
+      * matched clause exists is nondeterministic — reject. Skipped when
+      * no matched clause exists or the equi key is distinct in the source
+      * (each target row then matches at most once — the window's shuffle
+      * of victims × source is pure cost). Unmatched source rows get their
+      * own window partition via sid (a shared null-tid partition would
+      * serialize every insert through one task). */
+    def joined(target: DataFrame): DataFrame = {
+      val t = target.withColumn("__gl_tid", monotonically_increasing_id()).alias("t")
+      val s = src.withColumn("__gl_sid", monotonically_increasing_id()).alias("s")
+      val j = t.join(s, condition, "full_outer")
+      val uniqueMatch = equi.exists { case (_, sCol) =>
+        val (_, _, n, d) = aggOf(sCol); n == d
+      }
+      if (matched.isEmpty || uniqueMatch) j
+      else {
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(
+          col("t.__gl_tid"),
+          when(col("t.__gl_tid").isNull, col("s.__gl_sid")).otherwise(lit(0L)))
+        j.withColumn("__gl_n", sum(when(isMatched, 1L).otherwise(0L)).over(w))
+          .where(when(isMatched && col("__gl_n") > 1L,
+            assert_true(lit(false), lit(s"MERGE INTO ${snap.dir}: a target row " +
+              "matched multiple source rows; make the ON condition more " +
+              "selective or deduplicate the source")).isNotNull)
+            .otherwise(lit(true)))
+      }
+    }
+
+    /** The clause chains' `__gl_r` struct as rows; null = no row. */
+    def expand(df: DataFrame): DataFrame =
+      df.where(col("__gl_r").isNotNull).select("__gl_r.*")
   }
 
   /** The first `t.col = s.col` equi-conjunct of a merge condition, found
@@ -1965,10 +1904,9 @@ object GraftLake {
     // global layout is wanted. OPTIMIZE ... WHERE keeps bin-packing —
     // targeted compaction must not reshuffle untouched layout.
     if (where.isEmpty && clusterByOf(snapshot(spark, dir)).isDefined) {
-      return retryRewriteEvolving(spark, dir, "zorder") { snap =>
+      return fence(dir, "zorder") { snap =>
         clusterByOf(snap) match {
-          case None => // unset under the fence
-            (Nil, emptyDf(spark, snap.schema), None, None, None)
+          case None => None // unset under the fence
           case Some(cols) =>
             val uncl = unclusteredFiles(snap)
             // generation consolidation: under a frequent append+OPTIMIZE
@@ -1994,8 +1932,7 @@ object GraftLake {
             val victims =
               if (victims0.size <= maxVictims) victims0
               else victims0.sortBy(_.bytes).take(maxVictims)
-            if (victims.isEmpty)
-              (Nil, emptyDf(spark, snap.schema), None, None, None)
+            if (victims.isEmpty) None
             else {
               val bytes = victims.map(_.bytes).sum
               val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
@@ -2014,14 +1951,14 @@ object GraftLake {
                 .repartitionByRange(n, col("__z"))
                 .sortWithinPartitions("__z")
                 .drop("__z")
-              (victims, df, None,
-                Some(snap.clusterBounds.getOrElse(boundsJson(bits, bounds))),
-                Some(clusterTagOf(snap, cols)))
+              Some(rewriteAttempt(snap, "zorder", victims, df,
+                clusterBounds = Some(snap.clusterBounds.getOrElse(boundsJson(bits, bounds))),
+                cluster = Some(clusterTagOf(snap, cols)), rebase = true))
             }
         }
-      }
+      }.fold(latestVersion(dir))(_._1)
     }
-    retryRewriteEvolving(spark, dir, "optimize") { snap =>
+    fence(dir, "optimize") { snap =>
       // `where` = TARGETED compaction (Delta's OPTIMIZE ... WHERE): only
       // files whose footer stats overlap the predicate are candidates —
       // at 100 TB you compact the hot day/tenant, never the whole table
@@ -2034,8 +1971,7 @@ object GraftLake {
       val small =
         if (small0.size <= maxVictims) small0
         else small0.sortBy(_.bytes).take(maxVictims)
-      if (small.size < 2 && !small.exists(_.dv.isDefined))
-        (Nil, emptyDf(spark, snap.schema), None, None, None)
+      if (small.size < 2 && !small.exists(_.dv.isDefined)) None
       else {
         val total = small.map(_.bytes).sum
         val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
@@ -2060,12 +1996,11 @@ object GraftLake {
             .drop("__z"),
             clusterTagOf(snap, cols))
         }
-        zAligned match {
-          case Some((df, tag)) => (small, df, None, None, Some(tag))
-          case None => (small, base.repartition(nOut), None, None, None)
-        }
+        Some(rewriteAttempt(snap, "optimize", small,
+          zAligned.fold(base.repartition(nOut))(_._1), cluster = zAligned.map(_._2),
+          rebase = true))
       }
-    }
+    }.fold(latestVersion(dir))(_._1)
   }
 
   /** ALTER TABLE ... RENAME COLUMN as a pure metadata commit. Two
@@ -2083,7 +2018,7 @@ object GraftLake {
     *    same resolution). */
   def renameColumn(spark: SparkSession, dir: String, oldName: String,
       newName: String): Long =
-    retry(dir, "rename-column") { snap =>
+    fence(dir, "rename-column") { snap =>
       require(snap.schema.fieldNames.contains(oldName), s"no column '$oldName' in $dir")
       require(!snap.schema.fieldNames.contains(newName),
         s"column '$newName' already exists in $dir")
@@ -2136,14 +2071,13 @@ object GraftLake {
         if (idOf(f0).isDefined) Seq(oldName -> movingId)
         else if (physNameOf(f0) == oldName) Seq(oldName -> -1L)
         else Nil
-      Some((Commit(snap.version + 1, System.currentTimeMillis(), "rename-column",
+      Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "rename-column",
         None, None, Some(StructType(fields).json), Nil, Nil,
         retiredNames = retire,
         props = clusterDelta ++ bloomDelta,
         clusterBounds = if (clusterDelta.nonEmpty &&
-          snap.clusterBounds.isDefined) Some("") else None),
-        snap.version + 1))
-    }.get
+          snap.clusterBounds.isDefined) Some("") else None)))
+    }.get._1
 
   /** ALTER TABLE ... DROP COLUMN as a pure metadata commit: the field id
     * is retired (never reused — maxColId keeps counting past it), so the
@@ -2153,7 +2087,7 @@ object GraftLake {
     * it (Iceberg readers allow the reuse because their filter evaluation
     * is id-keyed end-to-end; Spark's parquet pushdown is not). */
   def dropColumn(spark: SparkSession, dir: String, name: String): Long =
-    retry(dir, "drop-column") { snap =>
+    fence(dir, "drop-column") { snap =>
       require(snap.schema.fieldNames.contains(name), s"no column '$name' in $dir")
       require(snap.schema.fields.length > 1, s"cannot drop the only column of $dir")
       val ckRefs = constraintsReferencing(snap, name)
@@ -2177,7 +2111,7 @@ object GraftLake {
         } else Nil) ++
           snap.props.get(BloomNdvPrefix + name)
             .map(_ => BloomNdvPrefix + name -> None).toSeq
-      Some((Commit(snap.version + 1, System.currentTimeMillis(), "drop-column",
+      Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "drop-column",
         None, None, Some(StructType(fields).json), Nil, Nil,
         maxColId = Some(snap.maxColId),
         // retire the name the FILES carry — the physical name for a
@@ -2187,9 +2121,8 @@ object GraftLake {
           idOf(snap.schema(name)).getOrElse(-1L)),
         props = clusterDelta ++ bloomDelta,
         clusterBounds = if (clusterDelta.nonEmpty &&
-          snap.clusterBounds.isDefined) Some("") else None),
-        snap.version + 1))
-    }.get
+          snap.clusterBounds.isDefined) Some("") else None)))
+    }.get._1
 
   /** ALTER TABLE ... ADD COLUMN as a pure metadata commit: the new column
     * gets a FRESH field id (maxColId + 1 — never a reused one), existing
@@ -2200,7 +2133,7 @@ object GraftLake {
     * filters on the re-added column to the dead data. */
   def addColumn(spark: SparkSession, dir: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): Long =
-    retry(dir, "add-column") { snap =>
+    fence(dir, "add-column") { snap =>
       require(!snap.schema.fieldNames.contains(name),
         s"column '$name' already exists in $dir")
       require(!snap.retired.contains(name),
@@ -2214,10 +2147,10 @@ object GraftLake {
         s"column name '$name' is the physical (file-side) name of " +
           "a renamed column and data files carry it; pick a different name")
       val f = withId(StructField(name, dataType, nullable = true), snap.maxColId + 1)
-      Some((Commit(snap.version + 1, System.currentTimeMillis(), "add-column",
+      Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "add-column",
         None, None, Some(StructType(snap.schema.fields :+ f).json), Nil, Nil,
-        maxColId = Some(snap.maxColId + 1)), snap.version + 1))
-    }.get
+        maxColId = Some(snap.maxColId + 1))))
+    }.get._1
 
   /** ALTER TABLE ... SET TBLPROPERTIES ('checkpointEvery'='n') as a pure
     * metadata commit. The cadence is a FOLDED property (latest setting
@@ -2226,12 +2159,12 @@ object GraftLake {
     * disables new checkpoints (existing ones keep accelerating reads). */
   def setCheckpointEvery(spark: SparkSession, dir: String, every: Int): Long = {
     require(every >= 0, s"checkpointEvery must be >= 0, got $every")
-    retry(dir, "set-properties") { snap =>
+    fence(dir, "set-properties") { snap =>
       if (snap.ckptEvery == every) None // already there
-      else Some((Commit(snap.version + 1, System.currentTimeMillis(),
+      else Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(),
         "set-properties", None, None, None, Nil, Nil,
-        ckptEvery = Some(every)), snap.version + 1))
-    }.getOrElse(latestVersion(dir))
+        ckptEvery = Some(every))))
+    }.fold(latestVersion(dir))(_._1)
   }
 
   /** Folded table property key for liquid-clustering-lite: comma-
@@ -2545,7 +2478,7 @@ object GraftLake {
     require(sets.nonEmpty || unsets.nonEmpty, "nothing to change")
     require(sets.keySet.intersect(unsets.toSet).isEmpty,
       "a key cannot be both set and unset")
-    retry(dir, "set-properties") { snap =>
+    fence(dir, "set-properties") { snap =>
       validateTableProps(snap.schema, sets)
       validateConstraintData(spark, snap, sets)
       val ckpt = sets.get("checkpointEvery").map(_.toInt)
@@ -2558,15 +2491,14 @@ object GraftLake {
         case (k, v) => snap.props.get(k) != v
       }
       if (!changed) None
-      else Some((Commit(snap.version + 1, System.currentTimeMillis(),
+      else Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(),
         "set-properties", None, None, None, Nil, Nil,
         ckptEvery = ckpt, props = deltas,
         // changing the clustering columns invalidates persisted bucket
         // boundaries; the next OPTIMIZE recomputes and re-persists
         clusterBounds = if (deltas.exists(_._1 == ClusterByKey) &&
-          snap.clusterBounds.isDefined) Some("") else None),
-        snap.version + 1))
-    }.getOrElse(latestVersion(dir))
+          snap.clusterBounds.isDefined) Some("") else None)))
+    }.fold(latestVersion(dir))(_._1)
   }
 
   /** The latest version whose commit timestamp is <= `tsMillis` —
@@ -2594,7 +2526,7 @@ object GraftLake {
       .filterNot(rel => fileAt(dir, rel).exists())
     require(missing.isEmpty,
       s"cannot restore $dir to v$version: ${missing.size} file(s) vacuumed, e.g. ${missing.head}")
-    retry(dir, "restore") { snap =>
+    fence(dir, "restore") { snap =>
       if (snap.version == version) None // already there
       else {
         val curByPath = snap.files.map(f => f.path -> f).toMap
@@ -2606,10 +2538,10 @@ object GraftLake {
         val removes = (curByPath.keySet -- tgt.keySet).toSeq.sorted
         val schemaJson =
           if (snap.schema == target.schema) None else Some(target.schema.json)
-        Some((Commit(snap.version + 1, System.currentTimeMillis(), "restore",
-          None, None, schemaJson, adds, removes), snap.version + 1))
+        Some(Attempt(Commit(snap.version + 1, System.currentTimeMillis(), "restore",
+          None, None, schemaJson, adds, removes)))
       }
-    }.getOrElse(version)
+    }.fold(version)(_._1)
   }
 
   /** Reclaim (a) orphan data files no log version references — debris of
@@ -2696,7 +2628,7 @@ object GraftLake {
     // ── DV sidecars ride the same lifecycle, keyed by AddFile reference:
     // a sidecar is removed when its carrying AddFile is removed OR
     // re-added with a different DV (delete-mor growth, restore rollback).
-    // Orphans (crash debris of a lost delete-mor fence) age by mtime.
+    // Orphans (crash debris) age by mtime.
     val everReferencedDv = cs.flatMap(_.adds.flatMap(_.dv.map(_.path))).toSet
     val activeDv = activeFiles.flatMap(_.dv.map(_.path)).toSet
     val dvRemovedTs = {
@@ -2757,19 +2689,7 @@ object GraftLake {
   def scanRange(spark: SparkSession, dir: String, column: String,
       lo: Any, hi: Any): (DataFrame, Int, Int) = {
     val snap = snapshot(spark, dir)
-    val hit = snap.files.filter { f =>
-      f.stats.get(statsKey(snap.schema, column)) match {
-        case Some(st) =>
-          if (st.min.isEmpty || st.max.isEmpty)
-            // no value bounds: skippable only if provably all-null
-            !(st.nullCount >= 0 && st.nullCount == f.rows)
-          else (for {
-            c1 <- cmpOpt(st.kind, st.max.get, lo.toString)
-            c2 <- cmpOpt(st.kind, st.min.get, hi.toString)
-          } yield c1 >= 0 && c2 <= 0).getOrElse(true)
-        case None => true
-      }
-    }
+    val hit = rangeCandidates(snap.files, statsKey(snap.schema, column), Some(lo), Some(hi))
     val df =
       if (hit.isEmpty) emptyDf(spark, snap.schema)
       else readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
@@ -2895,12 +2815,11 @@ object GraftLake {
     * large-domain columns at 100 TB). */
   def optimizeZOrder(spark: SparkSession, dir: String, cols: Seq[String],
       numFiles: Int): Long =
-    retryRewriteEvolving(spark, dir, "zorder") { snap =>
+    fence(dir, "zorder") { snap =>
       // nothing to do only when the layout cannot change: empty table, or
       // one file that would stay one file (a single file CAN re-cluster
       // into many — how a compacted table regains pruning granularity)
-      if (snap.files.isEmpty || (snap.files.size == 1 && numFiles <= 1))
-        (Nil, emptyDf(spark, snap.schema), None, None, None)
+      if (snap.files.isEmpty || (snap.files.size == 1 && numFiles <= 1)) None
       else {
         val df0 = readFiles(spark, snap, snap.activePaths)
         val bits = graft.sources.Layout.clusterBits(cols.size)
@@ -2918,9 +2837,10 @@ object GraftLake {
           .repartitionByRange(numFiles, col("__z"))
           .sortWithinPartitions("__z")
           .drop("__z")
-        (snap.files, df, None, persist, Some(clusterTagOf(snap, cols)))
+        Some(rewriteAttempt(snap, "zorder", snap.files, df, clusterBounds = persist,
+          cluster = Some(clusterTagOf(snap, cols)), rebase = true))
       }
-    }
+    }.fold(latestVersion(dir))(_._1)
 
   private[lake] def baseName(p: String): String =
     p.substring(p.lastIndexOf('/') + 1)
@@ -2986,60 +2906,121 @@ object GraftLake {
   private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  // ── shared rewrite/retry machinery ───────────────────────────────────
+  // ── the commit loop ──────────────────────────────────────────────────
 
-  /** Test-only seam: invoked (once) at the start of a [[retry]] loop,
+  /** Test-only seam: invoked (once) at the start of a [[fence]] loop,
     * after the caller took its pre-snapshot and staged — lets a spec land
     * a concurrent commit between the pre-snapshot and the fence. */
   private[lake] var testHookBeforeFence: Option[String => Unit] = None
 
-  /** Fence-retry loop: `build` sees the latest snapshot and returns the
-    * commit to attempt (None = nothing to do). The first attempt reuses
-    * `pre`, the caller's snapshot, while it is still the latest version
-    * (versions are immutable, so an unchanged latest version means an
-    * unchanged state); any newer version, and every later attempt, folds
-    * afresh. */
-  private def retry[A](dir: String, op: String, pre: Option[Snapshot] = None)(
-      build: Snapshot => Option[(Commit, A)]): Option[A] = {
+  /** Test-only seam: invoked (once) after an attempt has written its
+    * files, before that attempt's first commit — lets a spec interleave a
+    * concurrent commit deterministically into the write/commit window. */
+  private[lake] var testHookBeforeRewriteCommit: Option[String => Unit] = None
+
+  /** One planned write: the commit to publish and the files this attempt
+    * itself wrote — new data files and new DV sidecars, never the base
+    * file a DV re-add points at — which a lost fence deletes. `rebase`
+    * marks a PURE-LAYOUT rewrite (OPTIMIZE/ZORDER, row-set invariant by
+    * construction): a lost fence may re-target its commit past commits
+    * disjoint from its removes ([[canRebase]]) instead of re-planning. */
+  private final case class Attempt(commit: Commit, written: Seq[String] = Nil,
+      rebase: Boolean = false)
+
+  /** The lake's one commit loop. `attempt` plans against a snapshot and
+    * returns what to commit (None = nothing to do). The first attempt
+    * reuses `pre`, the caller's snapshot, while it is still the latest
+    * version (versions are immutable, so an unchanged latest version
+    * means an unchanged state); any newer version, and every later
+    * attempt, folds afresh. A lost fence (or a throw) deletes the
+    * attempt's own files by name, then re-plans — recompute-under-the-
+    * fence is what makes delete/update/merge serializable. `staged` are
+    * files the caller wrote once, before the loop (append, overwrite,
+    * replace, stream epochs): every attempt commits them, and they are
+    * deleted when the loop ends without a commit. Returns the committed
+    * version and the snapshot the winning attempt planned on. */
+  private def fence(dir: String, op: String, pre: Option[Snapshot] = None,
+      staged: Seq[AddFile] = Nil)(
+      attempt: Snapshot => Option[Attempt]): Option[(Long, Snapshot)] = {
     val spark = SparkSession.active
-    testHookBeforeFence.foreach { h => testHookBeforeFence = None; h(op) }
-    var reuse = pre.filter(_.version == latestVersion(dir))
-    var attempts = 0
-    while (attempts < 20) {
-      val snap = reuse.getOrElse(snapshot(spark, dir))
-      reuse = None
-      build(snap) match {
-        case None => return None
-        case Some((c, a)) =>
-          if (tryCommit(dir, c)) {
-            maybeCheckpoint(dir, c.version, c.ckptEvery.getOrElse(snap.ckptEvery))
-            return Some(a)
+    var landed = false
+    try {
+      testHookBeforeFence.foreach { h => testHookBeforeFence = None; h(op) }
+      var reuse = pre.filter(_.version == latestVersion(dir))
+      var attempts = 0
+      while (attempts < 20) {
+        val snap = reuse.getOrElse(snapshot(spark, dir))
+        reuse = None
+        val a = attempt(snap) match {
+          case Some(a) => a
+          case None => return None
+        }
+        try {
+          testHookBeforeRewriteCommit.foreach { h =>
+            testHookBeforeRewriteCommit = None; h(op)
           }
+          var c = a.commit
+          landed = tryCommit(dir, c)
+          // a pure-layout attempt that lost tries to REBASE onto the
+          // commits that beat it; each repeat means ANOTHER writer
+          // committed (lock-free system-wide progress), and past the
+          // bound it falls back to a full re-plan
+          var rebases = 0
+          while (!landed && a.rebase && rebases < 100 && {
+              val latest = latestVersion(dir)
+              canRebase((c.version to latest).map(v => parseCommit(versionFile(dir, v))),
+                c.removes.toSet) && {
+                c = c.copy(version = latest + 1, ts = System.currentTimeMillis())
+                true
+              }
+            }) {
+            rebases += 1
+            landed = tryCommit(dir, c)
+          }
+          if (landed) {
+            maybeCheckpoint(dir, c.version, c.ckptEvery.getOrElse(snap.ckptEvery))
+            return Some((c.version, snap))
+          }
+        } finally if (!landed) discard(dir, a.written)
+        attempts += 1
       }
-      attempts += 1
-    }
-    throw new LakeContentionException(s"$op at $dir lost the fence 20 times")
+      throw new LakeContentionException(s"$op at $dir lost the fence 20 times")
+    } finally if (!landed) discard(dir, staged.map(_.path))
   }
 
-  /** CoW rewrite with recompute-per-attempt: `plan` picks the files to
-    * replace and the replacement rows FROM THE LATEST SNAPSHOT; stage +
-    * commit; on a lost fence the staged files are discarded and the whole
-    * plan recomputes — serializable by construction. */
-  private def retryRewrite(spark: SparkSession, dir: String, op: String)(
-      plan: Snapshot => (Seq[AddFile], DataFrame)): Long =
-    retryRewriteEvolving(spark, dir, op) { snap =>
-      val (victims, replacement) = plan(snap); (victims, replacement, None, None, None)
+  /** Publish version 0 of a new table — `create`, `convert` and
+    * `shallowClone`. A lost fence means another writer created the table
+    * first: nothing to re-plan, so the loser deletes the files it wrote
+    * and fails. */
+  private def commitVersion0(dir: String, c: Commit,
+      written: Seq[String] = Nil): Long = {
+    if (!tryCommit(dir, c)) {
+      discard(dir, written)
+      throw new LakeContentionException(s"concurrent create at $dir")
     }
+    0L
+  }
 
-  /** [[retryRewrite]] that can additionally EVOLVE the table schema in
-    * the same commit (evolving MERGE): the staged files are stamped with
-    * the evolved field ids and the commit carries the new schema + the
-    * advanced maxColId — schema change and rewrite land atomically, so a
-    * failed merge never leaves half-applied columns behind. */
-  /** Test-only seam: invoked (once) after a rewrite has staged its
-    * files, before its first commit attempt — lets a spec interleave a
-    * concurrent commit deterministically into the stage/commit window. */
-  private[lake] var testHookBeforeRewriteCommit: Option[String => Unit] = None
+  /** Delete table-relative files that no commit references. */
+  private def discard(dir: String, paths: Seq[String]): Unit =
+    paths.foreach(p => new File(dir, p).delete())
+
+  /** A copy-on-write attempt: write `rows` as new files under the
+    * snapshot's schema (or `evolved`, committed in the same version so a
+    * failed merge never leaves half-applied columns behind) and replace
+    * `victims` with them in one commit. `cluster` tags the new files as a
+    * clustered generation; `clusterBounds` persists bucket boundaries. */
+  private def rewriteAttempt(snap: Snapshot, op: String, victims: Seq[AddFile],
+      rows: DataFrame, evolved: Option[StructType] = None,
+      clusterBounds: Option[String] = None, cluster: Option[String] = None,
+      rebase: Boolean = false): Attempt = {
+    val adds = stage(rows, snap.dir, 0, evolved.getOrElse(snap.schema), Some(snap))
+      .adds.map(_.copy(cluster = cluster))
+    Attempt(Commit(snap.version + 1, System.currentTimeMillis(), op, None, None,
+      evolved.map(_.json), adds, victims.map(_.path),
+      maxColId = evolved.map(maxIdOf(_, snap.maxColId)),
+      clusterBounds = clusterBounds), adds.map(_.path), rebase)
+  }
 
   /** Can a lost-fence PURE-LAYOUT rewrite (optimize/zorder — row-set
     * invariant by construction) rebase its already-staged commit onto
@@ -3058,66 +3039,6 @@ object GraftLake {
       b.schemaJson.isEmpty && b.props.isEmpty && b.clusterBounds.isEmpty &&
         b.removes.forall(!victimPaths.contains(_)) &&
         b.adds.forall(a => !victimPaths.contains(a.path)))
-
-  private def retryRewriteEvolving(spark: SparkSession, dir: String, op: String)(
-      plan: Snapshot => (Seq[AddFile], DataFrame, Option[StructType],
-        Option[String], Option[String])): Long = {
-    val pureLayout = op == "optimize" || op == "zorder"
-    var attempts = 0
-    while (attempts < 20) {
-      val snap = snapshot(spark, dir)
-      val (victims, replacement, evolvedOpt, boundsOpt, clusterTag) = plan(snap)
-      // merge ops can commit with zero victims (insert-only merges); every
-      // other rewrite with nothing to replace is a no-op
-      if (victims.isEmpty && op != "merge" && op != "merge-into") return snap.version
-      val adds = stage(replacement, dir, 0, evolvedOpt.getOrElse(snap.schema), Some(snap))
-        .adds.map(a => if (clusterTag.isDefined) a.copy(cluster = clusterTag) else a)
-      testHookBeforeRewriteCommit.foreach { h =>
-        testHookBeforeRewriteCommit = None; h(op)
-      }
-      var c = Commit(snap.version + 1, System.currentTimeMillis(), op, None, None,
-        evolvedOpt.map(_.json), adds, victims.map(_.path),
-        maxColId = evolvedOpt.map(s => maxIdOf(s, snap.maxColId)),
-        clusterBounds = boundsOpt)
-      var rebasing = true
-      var rebases = 0
-      while (rebasing) {
-        if (tryCommit(dir, c)) {
-          maybeCheckpoint(dir, c.version, snap.ckptEvery)
-          return c.version
-        }
-        // lost the fence. Pure-layout ops try to REBASE the staged work
-        // onto the commits that beat them; anything else re-plans. Each
-        // iteration only repeats if ANOTHER writer committed (lock-free
-        // system-wide progress); the bound is a backstop, past which the
-        // op falls back to a full re-plan.
-        rebases += 1
-        rebasing = pureLayout && rebases <= 100 && {
-          val latest = latestVersion(dir)
-          val between = (c.version to latest)
-            .map(v => parseCommit(versionFile(dir, v)))
-          canRebase(between, victims.map(_.path).toSet) && {
-            c = c.copy(version = latest + 1, ts = System.currentTimeMillis())
-            true
-          }
-        }
-      }
-      adds.foreach(a => new File(dir, a.path).delete()) // lost: discard staging
-      attempts += 1
-    }
-    throw new LakeContentionException(s"$op at $dir lost the fence 20 times")
-  }
-
-  private def rewrite(spark: SparkSession, dir: String, op: String,
-      predicate: Column)(f: (DataFrame, Snapshot) => DataFrame): Long =
-    retryRewrite(spark, dir, op) { snap =>
-      val hit = overlapping(snap, predicate)
-      if (hit.isEmpty) (Nil, emptyDf(spark, snap.schema))
-      else {
-        val df = readFiles(spark, snap, hit.map(h => absPath(snap.dir, h.path)))
-        (hit, f(df, snap))
-      }
-    }
 
   /** Files whose stats cannot DISPROVE the predicate. Simple
     * `col <op> literal` conjuncts, `IN` lists, and null checks prune;

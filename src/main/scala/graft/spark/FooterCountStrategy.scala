@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.SerializableWritable
+import graft.sources.lake.{ConfPairs, ParquetFooter}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GenericInternalRow, Literal, UnsafeProjection}
@@ -71,8 +71,7 @@ case class FooterCountExec(resultAttr: Attribute,
 
   override protected def doExecute(): RDD[InternalRow] = {
     val files = relation.location.inputFiles.toSeq
-    val hadoopConf =
-      new SerializableWritable(relation.sparkSession.sessionState.newHadoopConf())
+    val hadoopConf = new ConfPairs(relation.sparkSession.sessionState.newHadoopConf())
     val sc = relation.sparkSession.sparkContext
     val partials: RDD[Long] =
       if (files.isEmpty) sc.parallelize(Seq(0L), 1)
@@ -80,7 +79,7 @@ case class FooterCountExec(resultAttr: Attribute,
         .mapPartitions { it =>
           var s = 0L
           it.foreach { p =>
-            val r = graft.sources.lake.ParquetFooter.open(p, hadoopConf.value)
+            val r = ParquetFooter.open(p, hadoopConf.value)
             try s += r.getRecordCount finally r.close()
           }
           Iterator.single(s)

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `ParquetFooter.open`, which builds its read options from the
   * session's Hadoop conf. The no-options overload builds a fresh default
   * Hadoop `Configuration` per call (about 20 ms of classpath scanning a
-  * file) and ignores the session's conf. */
+  * file) and ignores the session's conf. A conf reaches tasks one way,
+  * as `ConfPairs`: `SerializableWritable` gzips every key's source list. */
 class FooterLintSpec extends AnyFunSuite {
 
   test("ParquetFileReader.open( occurs in src/main only once, inside ParquetFooter.open") {
@@ -31,5 +32,14 @@ class FooterLintSpec extends AnyFunSuite {
     }
     assert(hits == Seq("ParquetFooter.scala" -> "open"),
       s"parquet footer opens outside ParquetFooter.open: ${hits.mkString(", ")}")
+  }
+
+  test("SerializableWritable does not occur in src/main") {
+    val sources = SourceText.scalaFiles("src/main")
+    assert(sources.nonEmpty, "src/main not found from the working directory")
+    val hits = sources.filter(p =>
+      SourceText.stripComments(Files.readString(p)).contains("SerializableWritable"))
+    assert(hits.isEmpty,
+      s"ship Hadoop confs to tasks as ConfPairs, not SerializableWritable: ${hits.map(_.getFileName).mkString(", ")}")
   }
 }

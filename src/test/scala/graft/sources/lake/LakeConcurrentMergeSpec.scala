@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
 /**
  * Serializability of [[GraftLake.mergeInto]] under concurrency: two
  * general merges (update / delete on DISJOINT key classes) race an
- * append. Each loser of the commit fence recomputes its victims AND its
- * rewrite from the winner's snapshot (retryRewrite), so regardless of
- * commit order the outcome must equal the serial application of all
- * three effects — no lost rows, no duplicates, no resurrecting what a
- * racing delete removed.
+ * append. Each loser of the commit fence deletes what its attempt wrote
+ * and recomputes its victims AND its rewrite from the winner's snapshot
+ * (`GraftLake.fence`), so regardless of commit order the outcome must
+ * equal the serial application of all three effects — no lost rows, no
+ * duplicates, no resurrecting what a racing delete removed, and no
+ * unreferenced file left behind.
  */
 class LakeConcurrentMergeSpec extends SparkSpec {
 
@@ -125,5 +126,53 @@ class LakeConcurrentMergeSpec extends SparkSpec {
     val expectedDead = (0 until 400)
       .filter(i => i % 2 == 0 || i % 3 == 0 || i % 6 == 1).map(_.toLong).toSet
     assert(deadOrUpdated == expectedDead)
+  }
+
+  test("a MoR op that loses its fence once re-plans and leaves no file behind") {
+    val base = (0 until 100).map(i => (i.toLong, "base", i.toLong))
+    // each op hits ids ≡ 0 (mod 10), including id 1000, which the hook
+    // appends between the op's first attempt and its first commit
+    val raced = (1000L, "new", 1000L)
+    val rows = base :+ raced
+    val hit: ((Long, String, Long)) => Boolean = _._1 % 10 == 0
+    val mergeSrc = ((0L until 100L by 10L) ++ Seq(1000L, 2000L))
+      .map(i => (i, "src", -i)).toDF("id", "tag", "v")
+    // (op, call, serial outcome: the append, then the op)
+    val ops: Seq[(String, String => Long, Set[(Long, String, Long)])] = Seq(
+      ("deleteMoR", dir => GraftLake.deleteMoR(spark, dir, col("id") % 10 === 0),
+        rows.filterNot(hit).toSet),
+      ("updateMoR", dir => GraftLake.updateMoR(spark, dir, col("id") % 10 === 0,
+          Seq("tag" -> lit("upd"))),
+        rows.map(r => if (hit(r)) r.copy(_2 = "upd") else r).toSet),
+      ("mergeIntoMoR", dir => GraftLake.mergeIntoMoR(spark, dir, mergeSrc,
+          col("t.id") === col("s.id"),
+          matched = Seq(GraftLake.MatchedUpdate(None, Seq("v" -> col("s.v")))),
+          notMatched = Seq(GraftLake.NotMatchedInsert(None,
+            Seq("id" -> col("s.id"), "tag" -> col("s.tag"), "v" -> col("s.v"))))),
+        rows.map(r => if (hit(r)) r.copy(_3 = -r._1) else r).toSet + ((2000L, "src", -2000L))))
+    ops.foreach { case (name, op, serial) =>
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_lake_mor_orphan").toString + "/t"
+      GraftLake.create(base.toDF("id", "tag", "v"), dir, numFiles = 4)
+      var hookRan = false
+      GraftLake.testHookBeforeRewriteCommit = Some { _ =>
+        hookRan = true
+        GraftLake.append(Seq(raced).toDF("id", "tag", "v"), dir, numFiles = 1)
+      }
+      try op(dir) finally GraftLake.testHookBeforeRewriteCommit = None
+      assert(hookRan, s"$name: the hook must fire before the first commit")
+      assert(GraftLake.history(dir).map(_._2).take(2) == Seq("create", "append"))
+      assert(GraftLake.read(spark, dir).select("id", "tag", "v")
+        .as[(Long, String, Long)].collect().toSet == serial,
+        s"$name: the re-planned op must see the raced-in row")
+
+      val cs = GraftLake.commits(dir)
+      def onDisk(sub: String, ext: String): Set[String] =
+        Option(new java.io.File(dir, sub).listFiles()).getOrElse(Array.empty)
+          .map(_.getName).filter(_.endsWith(ext)).map(n => s"$sub/$n").toSet
+      val orphans = (onDisk("data", ".parquet") -- cs.flatMap(_.adds.map(_.path))) ++
+        (onDisk("dv", ".bin") -- cs.flatMap(_.adds.flatMap(_.dv.map(_.path))))
+      assert(orphans.isEmpty, s"$name: the lost attempt left $orphans behind")
+    }
   }
 }

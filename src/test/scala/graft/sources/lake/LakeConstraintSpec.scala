@@ -223,7 +223,7 @@ class LakeConstraintSpec extends SparkSpec {
       "the violating batch must not have committed")
     assert(GraftLake.read(spark, dir).filter(col("price") <= 0).count() == 0L,
       "write-side induction invariant must hold")
-    // discardOnThrow: the staged-but-never-referenced files were deleted
+    // the fence loop deleted the staged-but-never-referenced files
     val referenced = GraftLake.snapshot(spark, dir).files.map(_.path).toSet
     val onDisk = Option(new java.io.File(dir, "data").listFiles())
       .getOrElse(Array.empty).map(f => s"data/${f.getName}").toSet
