@@ -1,12 +1,16 @@
 package graft
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSession
 
 /** The one session policy every entry point and the test harness build on:
   * UTC session time, no UI, testdata's TIMESTAMP(NANOS) read as raw longs,
-  * the graft SQL extensions and the lake's session-catalog face. No other
-  * file in the library starts a session builder (`SessionLintSpec`
-  * enforces it).
+  * the graft SQL extensions, the lake's session-catalog face and the
+  * fork-free streaming-checkpoint manager for `file:` checkpoint dirs
+  * ([[graft.streaming.LocalCheckpointFileManager]], Spark's
+  * `spark.sql.streaming.checkpointFileManagerClass`; other schemes keep
+  * Spark's default). No other file in the library starts a session
+  * builder (`SessionLintSpec` enforces it).
   */
 object GraftSession {
 
@@ -26,6 +30,9 @@ object GraftSession {
       // face (delegating: non-lake tables untouched)
       .config("spark.sql.catalog.spark_catalog",
         "graft.sources.lake.GraftLakeCatalog")
+      // checkpoint logs and state-store files through java.nio, not
+      // Hadoop's local FS, which forks readlink/chmod per file
+      .config(Map(LocalCheckpointFileManager.Conf))
 
   /** `local[cpus]` with as many shuffle partitions, cpus from
     * `SPARK_GRAFT_CPUS` (else `defaultCpus`) — the bench and tooling mains. */

@@ -2,7 +2,7 @@ package graft.apps
 
 import graft.functions.Kit
 import graft.model.{MyEventRecord, SendResult}
-import graft.streaming.{AsyncEnrich, Marked, StatefulTtlDedupTws, WindowedSink}
+import graft.streaming.{AsyncEnrich, LocalCheckpointFileManager, Marked, StatefulTtlDedupTws, WindowedSink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
@@ -94,23 +94,44 @@ object MediationApp {
    * running analytics query; toxic records stream to `toxicPath` as windowed
    * files in parallel.
    *
-   * State store: the dedup runs on RocksDB, and `start` turns on RocksDB
-   * changelog checkpointing (`spark.sql.streaming.stateStore.rocksdb.
-   * changelogCheckpointing.enabled`) unless the caller set it. Spark 4.1
-   * defaults it to false, so every batch commit uploads a full RocksDB
-   * snapshot; with the changelog a commit writes only that batch's
-   * changes and snapshots are taken by the maintenance thread. Measured
-   * on the perfbench `mediation` workload (4-vCPU VM, two traced pairs):
-   * `state.commit_ms` 640 → 340 ms a batch, traced throughput up 4–9%,
-   * outputs unchanged; end-to-end throughput moved within noise (+2.6%
-   * over six alternating pairs). Both are session-wide settings, like
-   * the provider.
+   * Session settings: `start` sets three, all session-wide, before
+   * either query starts.
+   *   - State store: the dedup runs on RocksDB, so any other provider
+   *     the session names is replaced.
+   *   - RocksDB changelog checkpointing (`spark.sql.streaming.stateStore.
+   *     rocksdb.changelogCheckpointing.enabled`), unless the caller set
+   *     it. Spark 4.1 defaults it to
+   *     false, so every batch commit uploads a full RocksDB snapshot; with
+   *     the changelog a commit writes only that batch's changes and
+   *     snapshots are taken by the maintenance thread. Measured on the
+   *     perfbench `mediation` workload (4-vCPU VM, two traced pairs):
+   *     `state.commit_ms` 640 → 340 ms a batch, traced throughput up
+   *     4–9%, outputs unchanged; end-to-end throughput moved within noise
+   *     (+2.6% over six alternating pairs).
+   *   - The checkpoint file manager (`spark.sql.streaming.
+   *     checkpointFileManagerClass`): [[graft.streaming.LocalCheckpointFileManager]],
+   *     unless the caller set a manager. `GraftSession` sets it too;
+   *     `start` sets it for a caller whose session was built elsewhere
+   *     (perfbench's is). Without libhadoop, Spark's
+   *     default manager forks `readlink` and `chmod` for every offsets,
+   *     commits and source log file on the driver and for every RocksDB
+   *     changelog and its checksum file in task commit. This one writes
+   *     through java.nio; like the default it does not fsync, and it
+   *     writes no `.crc` sidecar. Measured on the perfbench `mediation`
+   *     workload (4-vCPU VM), per micro-batch in one traced pair:
+   *     `stream.commit_ms` 79 → 2 ms, `stream.source_ms` 66 → 23,
+   *     `state.commit_ms` 343 → 21, `stream.batch_ms` 1,000 → 704, with
+   *     `state.update_ms` summed over the run and the enrich stage flat. A JFR
+   *     recording of one run counted 4,466 → 1,324 process starts, none
+   *     left from a checkpoint manager. Ten alternating pairs:
+   *     throughput 4,914 → 6,101 records/s, p50 latency 1,584 → 1,110 ms.
    */
   def start(spark: SparkSession, events: Dataset[MyEventRecord],
       historicalPaths: Seq[String], cfg: Config,
       client: () => AsyncEnrich.NotificationClient,
       outPath: String, toxicPath: String, checkpointRoot: String): Seq[StreamingQuery] = {
     import spark.implicits._
+    configureSession(spark)
 
     val (ok, toxic) = validitySplit(events)
 
@@ -142,16 +163,6 @@ object MediationApp {
     // with a TTL it runs TimeMode.ProcessingTime, where Spark re-triggers
     // no-data batches — bounded drains (AvailableNow) and sink-polling
     // tests are the compatible harnesses (see StatefulTtlDedupTws).
-    // Tws needs a multi-column-family store; getOption surfaces the
-    // HDFS-backed DEFAULT, so test for RocksDB rather than for absence
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    if (!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    if (spark.conf.getOption(changelogKey).isEmpty)
-      spark.conf.set(changelogKey, "true")
     val deduped = StatefulTtlDedupTws(novel, cfg.ttlMillis, timerClear = cfg.timerCleanup)
 
     // K5 log-effect taps → Spark-native observable metrics: per-batch row
@@ -178,6 +189,25 @@ object MediationApp {
       .start()
 
     Seq(analyticsQuery, toxicQuery)
+  }
+
+  /** The session settings both queries start on (see [[start]]): RocksDB
+    * state, and its changelog checkpointing and the checkpoint file
+    * manager where the session has none. Tws needs a multi-column-family
+    * store; getOption surfaces the HDFS-backed DEFAULT, so the provider
+    * test is for RocksDB rather than for absence. */
+  private def configureSession(spark: SparkSession): Unit = {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    if (!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
+      spark.conf.set(providerKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val changelogKey =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    if (spark.conf.getOption(changelogKey).isEmpty)
+      spark.conf.set(changelogKey, "true")
+    val (managerKey, manager) = LocalCheckpointFileManager.Conf
+    if (spark.conf.getOption(managerKey).isEmpty)
+      spark.conf.set(managerKey, manager)
   }
 
   /** S1 as a file-stream source: tail a directory of record files

@@ -1,12 +1,6 @@
 package graft.apps
 
-import java.nio.file.Files
-
 import graft.SparkSpec
-import graft.sources.Bus
-import graft.streaming.AsyncEnrich
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /**
  * Crash-resume correctness for the composed pipeline over the unbounded
@@ -25,51 +19,22 @@ import org.apache.spark.sql.streaming.Trigger
 class MediationRestartSpec extends SparkSpec {
 
   test("stop mid-drain, publish more, restart (tws): every record exactly once") {
-    val base = Files.createTempDirectory("medrestart").toString
+    val drain = new MediationDrain(spark, "medrestart")
     val (n1, n2) = (8000L, 4000L)
-    Bus.logBusAppend(DataGen.mockRecords(spark, n1), s"$base/bus", "events")
-    val cfg = MediationApp.Config(
-      ttlMillis = 600000L, timerCleanup = false,
-      trigger = Trigger.AvailableNow(),
-      enrich = AsyncEnrich.Config(clientId = "med-restart",
-        maxConcurrency = 64, ratePerSec = 1000000, burst = 1000000,
-        backoffMillis = 1L))
-    def startOnce() = MediationApp.start(spark,
-      MediationApp.busStream(spark, s"$base/bus", "events"),
-      historicalPaths = Nil, cfg, () => new AsyncEnrich.StubClient(),
-      s"$base/out", s"$base/toxic", s"$base/ckpt")
-    def countOut(): Long =
-      try spark.read.parquet(s"$base/out").count()
-      catch { case _: Exception => 0L }
-    def awaitAtLeast(k: Long): Unit = {
-      val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-      while (countOut() < k && System.nanoTime() < deadline) Thread.sleep(50)
-    }
+    drain.publish(n1)
 
     // run 1: stop as soon as the FIRST rows commit — mid-drain, with later
     // epochs unprocessed and possibly one in flight
-    val qs1 = startOnce()
-    try awaitAtLeast(1) finally qs1.foreach(_.stop())
-    val afterStop = countOut()
+    drain.runUntil(1)
+    val afterStop = drain.countOut()
     assert(afterStop > 0, "the first run must have committed something")
     info(s"stopped after $afterStop/$n1 rows")
 
     // publish the second tranche while the app is DOWN
-    Bus.logBusAppend(DataGen.mockRecords(spark, n2), s"$base/bus", "events")
+    drain.publish(n2)
 
     // run 2: same checkpoint — resumes bus offsets and dedup state
-    val qs2 = startOnce()
-    try awaitAtLeast(n1 + n2) finally qs2.foreach(_.stop())
-
-    val out = spark.read.parquet(s"$base/out")
-    assert(out.count() === n1 + n2,
-      s"expected exactly ${n1 + n2} results after restart, got ${out.count()}")
-    // exactly-once by identity, not just by count: the idempotent key
-    // (transactionId + customer id) of every published record appears once
-    val distinctKeys = out.select(concat_ws("-",
-        col("record.event.transactionId"), col("record.customer.id")))
-      .distinct().count()
-    assert(distinctKeys === n1 + n2,
-      s"duplicated records after replay: ${n1 + n2 - distinctKeys}")
+    drain.runUntil(n1 + n2)
+    drain.assertExactlyOnce(n1 + n2)
   }
 }
