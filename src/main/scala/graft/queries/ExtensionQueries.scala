@@ -1975,7 +1975,6 @@ object ExtensionQueries {
   // executed plan really went through the rewrite, so the gate can't pass
   // on the nested-loop fallback.
   private val xRangeJoinRule: Q = (s, dir) => {
-    graft.spark.GraftExtensions.registerAll(s)
     s.conf.set(graft.spark.RangeJoinChunkRule.ConfKey, "10800000") // 3 h
     val l = Tables.events(s, dir)
       .select(col("event_id"), Kit.nanosToMillis("ts").as("ts_ms"))

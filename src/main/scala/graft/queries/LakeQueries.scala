@@ -197,7 +197,7 @@ object LakeQueries {
       |ORDER BY o_orderkey, change_kind""".stripMargin
 
   // ── l5: the planner-integrated read path — LakeFileIndex under oracle ──
-  // A plain .filter over readPruned: FileSourceStrategy hands the pushed
+  // A plain .filter over GraftLake.read: FileSourceStrategy hands the pushed
   // data filters to the lake's FileIndex, which lists only
   // stat-overlapping files (LakeFileIndexSpec pins the opened-file count;
   // this gate pins the VALUES the planner-pruned scan returns).
@@ -207,7 +207,7 @@ object LakeQueries {
     GraftLake.create(p.repartitionByRange(8, col("o_orderkey")), tbl,
       checkpointEvery = 2)
     GraftLake.delete(s, tbl, col("o_orderkey") % 10 === 3)
-    graft.sources.lake.LakeFileIndex.readPruned(s, tbl)
+    GraftLake.read(s, tbl)
       .filter(col("o_orderkey") >= 3000L && col("o_orderkey") <= 5999L)
       .select(col("o_orderkey"), col("o_orderstatus"), col("price_c"))
       .orderBy(col("o_orderkey"))
@@ -645,7 +645,7 @@ object LakeQueries {
       "the active AddFiles must carry deletion-vector references")
     val cols = Seq(col("o_orderkey"), col("o_orderstatus"),
       col("o_orderpriority"), col("price_c"))
-    val now = graft.sources.lake.LakeFileIndex.readPruned(s, tbl)
+    val now = GraftLake.read(s, tbl)
       .select(cols: _*).withColumn("slice", lit("now"))
     val v1 = GraftLake.read(s, tbl, asOf = Some(1L))
       .select(cols: _*).withColumn("slice", lit("v1"))
@@ -700,7 +700,7 @@ object LakeQueries {
     require(GraftLake.snapshot(s, tbl).files.exists(_.dv.isDefined),
       "the superseded rows must be deletion-vectored, not rewritten")
     // metadata-only count: exact under DVs, zero scans
-    val cnt = graft.sources.lake.LakeFileIndex.readPruned(s, tbl)
+    val cnt = s.read.format("graft-lake").load(tbl)
       .groupBy().count()
     val scans = cnt.queryExecution.executedPlan.collect {
       case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
@@ -1125,7 +1125,7 @@ object LakeQueries {
       "an absent key must be disproven by the blooms")
     // the point lookup itself rides the planner-integrated scan (Eq/In
     // pushdown reaches parquet's task-side bloom check)
-    graft.sources.lake.LakeFileIndex.readPruned(s, tbl)
+    GraftLake.read(s, tbl)
       .filter(col("o_orderkey").isin(1L, 77L, 501L, 1001L, 1313L, 1499L))
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_orderpriority"), col("price_c"))

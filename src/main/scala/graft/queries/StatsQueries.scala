@@ -648,10 +648,6 @@ object StatsQueries {
     val tmp = java.nio.file.Files.createTempDirectory("graft_footer").toString
     Tables.lineitem(s, dir).select(col("l_orderkey"))
       .repartition(6).write.mode("overwrite").parquet(tmp)
-    val prev = s.experimental.extraStrategies
-    s.experimental.extraStrategies =
-      prev.filterNot(_ == graft.spark.FooterCountStrategy) :+
-        graft.spark.FooterCountStrategy
     s.conf.set("spark.graft.footerCount.enabled", "true")
     try {
       val agg = s.read.parquet(tmp).agg(count(lit(1)).as("n"))
@@ -659,10 +655,7 @@ object StatsQueries {
         agg.queryExecution.executedPlan.toString.contains("FooterCount")
       val n = agg.collect()(0).getLong(0)
       s.range(1).select(lit(n).as("n"), lit(usedFooter).as("used_footer"))
-    } finally {
-      s.conf.unset("spark.graft.footerCount.enabled")
-      s.experimental.extraStrategies = prev
-    }
+    } finally s.conf.unset("spark.graft.footerCount.enabled")
   }
   private val xFooterCountSql =
     """SELECT CAST(count(*) AS BIGINT) AS n, true AS used_footer
@@ -682,7 +675,6 @@ object StatsQueries {
     s.read.parquet(factDir).groupBy(col("o_orderpriority"), col("o_orderstatus"))
       .agg(sum(col("price_c")).as("sum_price_c"), count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(mvDir)
-    graft.spark.GraftExtensions.registerAll(s)
     s.conf.set(graft.spark.MvRewriteRule.ConfKey,
       s"$factDir::$mvDir::o_orderpriority,o_orderstatus::price_c")
     try {

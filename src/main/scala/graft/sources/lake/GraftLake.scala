@@ -50,7 +50,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
  * Per-file column stats (min/max/nullCount) come from the parquet
  * FOOTERS — the task that writes a file reads its own footer before it
  * returns ([[DataFileWriter]]), so there is no data scan and no
- * driver-side read — and drive file pruning in [[scanRange]]/[[scanEq]]:
+ * driver-side read — and drive file pruning in [[scanRange]] and in every
+ * planned read ([[LakeFileIndex]]):
  * at 100 TB the log + stats are the KB-sized planning object and a
  * selective range scan opens only the overlapping files.
  *
@@ -120,9 +121,7 @@ object GraftLake {
       props: Map[String, String] = Map.empty,
       clusterBounds: Option[String] = None,
       features: Set[String] = Set.empty,
-      txns: Map[String, Long] = Map.empty) {
-    def activePaths: Seq[String] = files.map(f => GraftLake.absPath(dir, f.path))
-  }
+      txns: Map[String, Long] = Map.empty)
 
   /** Table FEATURES this build of the library understands — protocol
     * gating, the Delta table-features shape: every commit that uses a
@@ -1196,7 +1195,7 @@ object GraftLake {
             s"UPDATE sets unknown column '$name'")
         }
         val matched = coalesce(predicate, lit(false))
-        val rows = readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
+        val rows = LakeFileIndex.scan(spark, snap, hit)
           .select(snap.schema.fields.toIndexedSeq.map { f =>
             byName.get(f.name) match {
               case Some(v) =>
@@ -1249,7 +1248,7 @@ object GraftLake {
       val hit = overlapping(snap, predicate)
       if (hit.isEmpty) None
       else Some(rewriteAttempt(snap, "delete", hit,
-        readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
+        LakeFileIndex.scan(spark, snap, hit)
           .filter(!coalesce(predicate, lit(false)))))
     }.fold(latestVersion(dir))(_._1)
 
@@ -1261,12 +1260,11 @@ object GraftLake {
     * file bytes) (the write-amplification wall CoW hits at 100 TB with
     * row-level deletes; Delta/Iceberg-v2 position deletes, re-derived).
     *
-    * Read-path contract: EVERY reader applies DVs — [[readFiles]] (read /
-    * scan / CoW victim selection / optimize / zorder), the
-    * planner-integrated [[LakeFileIndex]] path (via the DML rule's
-    * DV-splitting rewrite), [[changes]] (a grown DV emits exactly the
-    * delta positions as deletes, via AddFile-identity diff + net
-    * `exceptAll`), and the streaming source (fails fast or skips the
+    * Read-path contract: EVERY reader applies DVs — [[LakeFileIndex.scan]]
+    * (read / scan / CoW victim selection / optimize / zorder, and the DML
+    * rule's DV-splitting rewrite of catalog reads), [[changes]] (a grown
+    * DV emits exactly the delta positions as deletes, via AddFile-identity
+    * diff + net `exceptAll`), and the streaming source (fails fast or skips the
     * commit like any row-removing op; the initial snapshot applies DVs).
     *
     * Positions aggregate as bitmaps ON EXECUTORS (map-side partials, one
@@ -1323,7 +1321,7 @@ object GraftLake {
           val byName = set.toMap
           val markedFiles = marked.keySet
           val sources = hit.filter(f => markedFiles.contains(baseName(f.path)))
-          val updated = readFiles(spark, snap, sources.map(f => absPath(dir, f.path)))
+          val updated = LakeFileIndex.scan(spark, snap, sources)
             .filter(coalesce(predicate, lit(false)))
             .select(snap.schema.fields.toIndexedSeq.map { fld =>
               byName.get(fld.name).map(_.cast(fld.dataType).as(fld.name))
@@ -1338,39 +1336,13 @@ object GraftLake {
     }.fold(latestVersion(dir))(_._1)
 
   /** Scan `files` exposing per-row (`__gl_file` = basename, `__gl_pos` =
-    * row index) alongside `schema`'s columns, with already-deleted
-    * positions subtracted — the shared victim-read for MoR DML. Clean
-    * and DV-carrying files split into two FileSourceScans under one
-    * union (both keep pushdown/pruning); descriptors ride the per-file
-    * metadata, never the plan. */
+    * row index) ahead of `snap`'s columns, with already-deleted positions
+    * subtracted — the shared victim-read for MoR DML. */
   private def scanWithPositions(spark: SparkSession, snap: Snapshot,
-      files: Seq[AddFile], schema: StructType): DataFrame = {
-    ensureFieldIdRead(spark)
-    val outCols = Seq(col("_metadata.file_name").as("__gl_file"),
-      col("_metadata.row_index").as("__gl_pos")) ++
-      schema.fieldNames.map(col).toSeq
-    def branch(group: Seq[AddFile], withDv: Boolean): Option[DataFrame] =
-      if (group.isEmpty) None
-      else {
-        val idx = new LakeFileIndex(spark, snap.dir, None,
-          Some(snap.copy(schema = schema, files = group)), Some(withDv))
-        val df = spark.baseRelationToDataFrame(
-          LakeFileIndex.relationFor(spark, idx))
-        val live = if (withDv) df.where(!dvDeletedCol()) else df
-        Some(live.select(outCols: _*))
-      }
-    val (dvd, clean) = files.partition(_.dv.isDefined)
-    (branch(clean, withDv = false), branch(dvd, withDv = true)) match {
-      case (Some(c), Some(d)) => c.unionByName(d)
-      case (Some(c), None) => c
-      case (None, Some(d)) => d
-      case (None, None) =>
-        emptyDf(spark, StructType(
-          StructField("__gl_file", org.apache.spark.sql.types.StringType) +:
-          StructField("__gl_pos", org.apache.spark.sql.types.LongType) +:
-          schema.fields.toSeq))
-    }
-  }
+      files: Seq[AddFile]): DataFrame =
+    LakeFileIndex.scan(spark, snap, files, Seq(
+      col("_metadata.file_name").as("__gl_file"),
+      col("_metadata.row_index").as("__gl_pos")))
 
   /** Per-file bitmaps of LIVE rows matching `predicate`: map-side partial
     * bitmaps, merged per file, collected as compressed bytes (basename →
@@ -1379,7 +1351,7 @@ object GraftLake {
   private def markDeletedPositions(spark: SparkSession, snap: Snapshot,
       files: Seq[AddFile], predicate: Column): Map[String, Array[Byte]] = {
     import spark.implicits._
-    val pairs = scanWithPositions(spark, snap, files, snap.schema)
+    val pairs = scanWithPositions(spark, snap, files)
       .filter(predicate)
       .select(col("__gl_file"), col("__gl_pos")).as[(String, Long)]
     bitmapsOf(pairs)
@@ -1465,7 +1437,7 @@ object GraftLake {
         val candidates = rangeCandidates(snap.files, statsKey(snap.schema, key), lo, hi)
         val base =
           if (candidates.isEmpty) emptyDf(spark, snap.schema)
-          else readFiles(spark, snap, candidates.map(f => absPath(dir, f.path)))
+          else LakeFileIndex.scan(spark, snap, candidates)
         val rewritten = base.join(upd.select(col(key)).distinct(), Seq(key), "left_anti")
           .unionByName(upd, allowMissingColumns = true)
         // commits even with no candidate: the updates are all inserts
@@ -1524,8 +1496,13 @@ object GraftLake {
     val rowT: StructType = StructType(fields.map(f =>
       StructField(f.name, f.dataType, nullable = true)))
     val nullRow: Column = lit(null).cast(rowT)
-    def keepStruct: Column =
-      struct(fields.map(f => col(s"t.${f.name}").as(f.name)): _*)
+    /** A row value, typed `rowT` whatever its fields' nullability: with
+      * every branch one type, the optimizer folding away null or constant
+      * branches cannot narrow the chain's type, so a checkpoint of the
+      * chain (MoR MERGE) keeps one output type across its logical and
+      * optimized plans (else `LogicalRDD` warns and drops its stats). */
+    private def row(values: Seq[Column]): Column = struct(values: _*).cast(rowT)
+    def keepStruct: Column = row(fields.map(f => col(s"t.${f.name}").as(f.name)))
 
     def validate(): Unit = {
       val names = fields.map(_.name).toSet
@@ -1543,10 +1520,10 @@ object GraftLake {
         c match {
           case MatchedUpdate(cond, set) =>
             val byName = set.toMap
-            val updated = struct(fields.map { f =>
+            val updated = row(fields.map { f =>
               byName.get(f.name).map(_.cast(f.dataType))
                 .getOrElse(col(s"t.${f.name}")).as(f.name)
-            }: _*)
+            })
             when(cond.getOrElse(lit(true)), updated).otherwise(els)
           case MatchedDelete(cond) =>
             when(cond.getOrElse(lit(true)), nullRow).otherwise(els)
@@ -1556,10 +1533,10 @@ object GraftLake {
     val insertChain: Column =
       notMatched.foldRight(nullRow) { (c, els) =>
         val byName = c.values.toMap
-        val ins = struct(fields.map { f =>
+        val ins = row(fields.map { f =>
           byName.get(f.name).map(_.cast(f.dataType))
             .getOrElse(lit(null).cast(f.dataType)).as(f.name)
-        }: _*)
+        })
         when(c.condition.getOrElse(lit(true)), ins).otherwise(els)
       }
 
@@ -1689,7 +1666,7 @@ object GraftLake {
       val ch = p.ch
       // target = victim files' LIVE rows WITH physical positions
       // (clean/DV split scan, per-file descriptors in the FileIndex)
-      val joined = p.joined(scanWithPositions(spark, p.snapE, p.victims, p.evolved))
+      val joined = p.joined(scanWithPositions(spark, p.snapE, p.victims))
       // touched = a clause actually fires; untouched rows keep their
       // physical place (that is the whole point of merge-on-read)
       val firesMatched = p.isMatched && ch.fired(matched)
@@ -1809,7 +1786,7 @@ object GraftLake {
     /** `files`' live rows under the evolved schema. */
     def read(files: Seq[AddFile]): DataFrame =
       if (files.isEmpty) emptyDf(spark, evolved)
-      else readFiles(spark, snapE, files.map(f => absPath(snap.dir, f.path)))
+      else LakeFileIndex.scan(spark, snapE, files)
 
     val isMatched: Column = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNotNull
     val targetOnly: Column = col("t.__gl_tid").isNotNull && col("s.__gl_sid").isNull
@@ -1936,7 +1913,7 @@ object GraftLake {
             else {
               val bytes = victims.map(_.bytes).sum
               val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-              val df0 = readFiles(spark, snap, victims.map(f => absPath(dir, f.path)))
+              val df0 = LakeFileIndex.scan(spark, snap, victims)
               // bucket with the PERSISTED boundaries when the table has
               // them (z-aligned with earlier generations, no quantile
               // pass); first cluster of a table computes and persists
@@ -1975,7 +1952,7 @@ object GraftLake {
       else {
         val total = small.map(_.bytes).sum
         val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-        val base = readFiles(spark, snap, small.map(f => absPath(dir, f.path)))
+        val base = LakeFileIndex.scan(spark, snap, small)
         // targeted compaction of a CLUSTERED table keeps the rewrite
         // z-aligned when the persisted bucket boundaries exist: the
         // compacted hot slice re-sorts by the SAME cluster key the bulk
@@ -2374,7 +2351,7 @@ object GraftLake {
         (k.stripPrefix(ConstraintPrefix), sql)
     }.foreach { case (name, sql) =>
       if (snap.files.nonEmpty) {
-        val bad = readFiles(spark, snap, snap.activePaths)
+        val bad = LakeFileIndex.scan(spark, snap, snap.files)
           .filter(!coalesce(
             org.apache.spark.sql.functions.expr(sql).cast("boolean"),
             lit(true)))
@@ -2665,22 +2642,15 @@ object GraftLake {
 
   // ── reads ────────────────────────────────────────────────────────────
 
-  /** Read the table at the latest (or `asOf`) version. Missing columns in
-    * old files are null-filled to the evolved schema. */
+  /** Read the table at the latest (or `asOf`) version through
+    * [[LakeFileIndex.scan]]: filters prune files at planning time,
+    * deletion vectors apply, and old files missing an evolved column
+    * null-fill. */
   def read(spark: SparkSession, dir: String, asOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, dir, asOf)
     if (snap.files.isEmpty) emptyDf(spark, snap.schema)
-    else readFiles(spark, snap, snap.activePaths)
+    else LakeFileIndex.scan(spark, snap, snap.files)
   }
-
-  /** SQL addressability: register the table (at the latest or a pinned
-    * version) as a temp view, so `spark.sql("SELECT … FROM name")` works.
-    * The view captures the snapshot's FILE SET at registration — stable
-    * reads under concurrent writers (re-register to advance), which is
-    * exactly snapshot isolation. */
-  def registerView(spark: SparkSession, dir: String, name: String,
-      asOf: Option[Long] = None): Unit =
-    read(spark, dir, asOf).createOrReplaceTempView(name)
 
   /** Range scan with file-level stats pruning: returns the filtered
     * DataFrame plus (filesScanned, filesTotal). The residual filter keeps
@@ -2692,13 +2662,10 @@ object GraftLake {
     val hit = rangeCandidates(snap.files, statsKey(snap.schema, column), Some(lo), Some(hi))
     val df =
       if (hit.isEmpty) emptyDf(spark, snap.schema)
-      else readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
+      else LakeFileIndex.scan(spark, snap, hit)
     (df.filter(col(column) >= lit(lo) && col(column) <= lit(hi)),
       hit.size, snap.files.size)
   }
-
-  def scanEq(spark: SparkSession, dir: String, column: String,
-      value: Any): (DataFrame, Int, Int) = scanRange(spark, dir, column, value, value)
 
   /** General pruned scan: every `col <op> literal` conjunct of the
     * predicate prunes via footer stats (the same machinery CoW victim
@@ -2710,7 +2677,7 @@ object GraftLake {
     val hit = overlapping(snap, predicate)
     val df =
       if (hit.isEmpty) emptyDf(spark, snap.schema)
-      else readFiles(spark, snap, hit.map(f => absPath(dir, f.path)))
+      else LakeFileIndex.scan(spark, snap, hit)
     (df.filter(predicate), hit.size, snap.files.size)
   }
 
@@ -2744,8 +2711,7 @@ object GraftLake {
     // each side's AddFiles carry their OWN snapshot's DV state
     def side(files: Seq[AddFile]): DataFrame =
       if (files.isEmpty) emptyDf(spark, to.schema)
-      else readFiles(spark, to.copy(files = files),
-        files.map(f => absPath(dir, f.path)))
+      else LakeFileIndex.scan(spark, to, files)
     val added = side(addedFiles)
     val removed = side(removedFiles)
     added.exceptAll(removed).withColumn("change_kind", lit("insert"))
@@ -2821,7 +2787,7 @@ object GraftLake {
       // into many — how a compacted table regains pruning granularity)
       if (snap.files.isEmpty || (snap.files.size == 1 && numFiles <= 1)) None
       else {
-        val df0 = readFiles(spark, snap, snap.activePaths)
+        val df0 = LakeFileIndex.scan(spark, snap, snap.files)
         val bits = graft.sources.Layout.clusterBits(cols.size)
         val bounds = graft.sources.Layout.clusterBounds(df0, cols, bits)
         // a whole-table re-layout on the DECLARED cluster columns renews
@@ -2868,40 +2834,6 @@ object GraftLake {
       org.apache.spark.sql.GraftColumnBridge.expression(
         col(s"_metadata.${GraftParquetFileFormat.DvPathField}")),
       org.apache.spark.sql.GraftColumnBridge.expression(col("_metadata.row_index"))))
-
-  /** `snap` restricted to the AddFiles whose absolute path is in `paths`
-    * (the identity every internal reader passes around). */
-  private def restrictTo(snap: Snapshot, paths: Seq[String]): Seq[AddFile] = {
-    val wanted = paths.map(baseName).toSet
-    snap.files.filter(f => wanted.contains(baseName(f.path)))
-  }
-
-  private[lake] def readFiles(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame = {
-    ensureFieldIdRead(spark) // columns resolve by field id (rename-stable)
-    val outCols = snap.schema.fieldNames.map(col).toIndexedSeq
-    val files = restrictTo(snap, paths)
-    if (!files.exists(_.dv.isDefined) && physicalMapOf(snap.schema).isEmpty)
-      // common case: zero DV / zero column-mapping overhead
-      spark.read.option("mergeSchema", "true")
-        .schema(snap.schema) // evolved schema: absent columns null-filled per file
-        .parquet(paths: _*)
-        .select(outCols: _*)
-    else if (!files.exists(_.dv.isDefined))
-      // renamed id-less columns present: the scan must translate
-      // logical → physical names, which only the planner-integrated
-      // relation (GraftParquetFileFormat) does
-      spark.baseRelationToDataFrame(LakeFileIndex.relationFor(spark,
-        LakeFileIndex.restricted(spark, snap, files)))
-        .select(outCols: _*)
-    else
-      // split the scan through the FileIndex: clean files read plain;
-      // DV-carrying files read with per-file __dv_path descriptors and
-      // the deleted positions filtered out. Two FileSourceScans under
-      // one union — pushed filters and column pruning reach both sides
-      LakeFileIndex.dvSplitFrame(spark,
-        LakeFileIndex.restricted(spark, snap, files))
-  }
 
   private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.StructType
  *  - READS resolve to the planner-integrated [[LakeFileIndex]] relation:
  *    `spark.table("t")` / `SELECT ... FROM t` plan a FileSourceScan whose
  *    file listing is footer-stats pruned by the pushed filters — the
- *    identical plan shape `LakeFileIndex.readPruned` produces. Option
- *    `versionAsOf` pins time travel.
+ *    relation `GraftLake.read` projects over. Option `versionAsOf` pins
+ *    time travel. A bare `count(*)` over this relation is answered from
+ *    the log ([[graft.spark.LakeDmlRule]]).
  *  - WRITES (`df.write.format("graft-lake")`, `CREATE TABLE ... AS
  *    SELECT`, `saveAsTable`) map SaveModes onto the log: ErrorIfExists →
  *    create, Append → append (create if absent), Overwrite → one commit
@@ -142,15 +143,14 @@ class GraftLakeSource extends RelationProvider with CreatableRelationProvider
       // a BaseRelation is ONE scan — deletion vectors need the DML rule's
       // split-scan rewrite above it. Refuse to hand out a naked relation
       // in a session that cannot apply it (silent resurrection of deleted
-      // rows otherwise); GraftLake.read / LakeFileIndex.readPruned work
-      // without extensions.
+      // rows otherwise); GraftLake.read works without extensions.
       val ruleInjected = spark.sessionState.analyzer
         .postHocResolutionRules.contains(graft.spark.LakeDmlRule)
       require(ruleInjected,
         s"lake table $dir carries deletion vectors; reading it through " +
           "format(\"graft-lake\")/spark.table requires " +
           "spark.sql.extensions=graft.spark.GraftExtensions (or use " +
-          "GraftLake.read / LakeFileIndex.readPruned)")
+          "GraftLake.read)")
     }
     LakeFileIndex.relationFor(spark, idx)
   }

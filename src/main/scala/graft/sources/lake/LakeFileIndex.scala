@@ -5,16 +5,20 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /**
  * Planner-integrated lake reads: a Spark [[FileIndex]] over a
  * [[GraftLake]] snapshot, so footer-stats FILE pruning happens inside
- * query planning — `readPruned(...).filter(pred)` plans a
+ * query planning — `GraftLake.read(...).filter(pred)` plans a
  * FileSourceScan over only the stat-overlapping files, no special scan
  * API needed (the same integration seam Delta's TahoeFileIndex uses).
+ * Every lake read plans through it: [[LakeFileIndex.scan]] builds the
+ * frame for `GraftLake.read` and every internal reader (DML victims,
+ * MERGE, OPTIMIZE/ZORDER, the change feed, the stream source, the MoR
+ * positions scan), and [[GraftLakeSource]] hands the catalog the bare
+ * relation. No read lists the table directory: the log is the listing.
  * `FileSourceStrategy` hands the pushed data filters to [[listFiles]];
  * anything the stats cannot disprove is listed, and the filters still
  * run as residuals — pruning is planning-time acceleration, never a
@@ -25,8 +29,8 @@ import org.apache.spark.sql.types.StructType
  * Deletion vectors: when the snapshot carries DV'd files, a SINGLE
  * FileSourceScan cannot subtract per-file row positions, so the scan is
  * SPLIT — `dvSubset` restricts one index to the clean files and a twin
- * to the DV-carrying ones; [[LakeFileIndex.readPruned]] (and the DML
- * rule, for catalog reads) unions the clean scan with the DV scan
+ * to the DV-carrying ones; [[LakeFileIndex.scan]] (which the DML rule
+ * also calls, for catalog reads) unions the clean scan with the DV scan
  * filtered by the codegen'd [[DvDeleted]] position predicate. BOTH
  * branches keep full planning-time footer-stats pruning — row-level
  * deletes are orthogonal to file-level skipping.
@@ -115,19 +119,19 @@ final class LakeFileIndex private[lake] (spark: SparkSession, val dir: String,
 
 object LakeFileIndex {
 
-  /** The planner-integrated relation itself — what [[readPruned]] wraps
-    * and what [[GraftLakeSource]] hands the catalog, so `spark.table` /
+  /** The relation over `idx` — what [[scan]] builds on and what
+    * [[GraftLakeSource]] hands the catalog, so `spark.table` /
     * `SELECT ... FROM t` plan the same pruned FileSourceScan. */
-  def relation(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None): HadoopFsRelation =
-    relationFor(spark, new LakeFileIndex(spark, dir, asOf))
-
   private[graft] def relationFor(spark: SparkSession,
       idx: LakeFileIndex): HadoopFsRelation =
     HadoopFsRelation(
       location = idx,
       partitionSchema = new StructType(),
-      dataSchema = idx.schema,
+      // nullable at every depth, as Spark's own file sources declare their
+      // data schema: an old file lacking an evolved column reads NULL
+      // there, so a NOT NULL the optimizer trusted would fold `IS NULL`
+      // filters to false
+      dataSchema = org.apache.spark.sql.GraftSchemaBridge.asNullable(idx.schema),
       bucketSpec = None,
       // parquet + the _metadata.__dv_path per-file constant column —
       // identical scan behavior for DV-less tables (the column is just
@@ -137,43 +141,27 @@ object LakeFileIndex {
         GraftLake.physicalMapOf(idx.schema)),
       options = Map("mergeSchema" -> "true"))(spark)
 
-  /** An index over `snap` restricted to `files` (same dir/schema) — how
-    * internal rewrite readers route DV'd subsets through the per-file
-    * descriptor machinery instead of a plan-level map. */
-  private[lake] def restricted(spark: SparkSession, snap: GraftLake.Snapshot,
-      files: Seq[GraftLake.AddFile]): LakeFileIndex =
-    new LakeFileIndex(spark, snap.dir, None, Some(snap.copy(files = files)), None)
-
-  /** The two DV-split siblings of an all-files index, SHARING its pinned
-    * snapshot (no reload, no race with concurrent commits). */
-  private[lake] def dvSplit(spark: SparkSession,
-      idx: LakeFileIndex): (LakeFileIndex, LakeFileIndex) = (
-    new LakeFileIndex(spark, idx.dir, None, Some(idx.snap), Some(false)),
-    new LakeFileIndex(spark, idx.dir, None, Some(idx.snap), Some(true)))
-
-  /** The DV-correct planner-integrated frame for a snapshot with DV'd
-    * files: clean scan ∪ (DV scan − deleted positions), both branches
-    * file-pruned at planning time; column order = snapshot schema. */
-  private[graft] def dvSplitFrame(spark: SparkSession,
-      idx: LakeFileIndex): DataFrame = {
-    val (cleanIdx, dvdIdx) = dvSplit(spark, idx)
-    val outCols: Seq[Column] = idx.schema.fieldNames.map(col).toIndexedSeq
-    val dvd = spark.baseRelationToDataFrame(relationFor(spark, dvdIdx))
-      .where(!GraftLake.dvDeletedCol())
-      .select(outCols: _*)
-    spark.baseRelationToDataFrame(relationFor(spark, cleanIdx))
-      .select(outCols: _*)
-      .unionByName(dvd)
-  }
-
-  /** A DataFrame whose scan plans through [[LakeFileIndex]]: filters
-    * prune files at planning time, automatically. Old files missing an
-    * evolved column null-fill via mergeSchema, as in [[GraftLake.read]];
-    * deletion vectors apply via the split-scan plan when present. */
-  def readPruned(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val idx = new LakeFileIndex(spark, dir, asOf)
-    if (idx.hasDv) dvSplitFrame(spark, idx)
-    else spark.baseRelationToDataFrame(relationFor(spark, idx))
+  /** The lake's one scan builder: `files` of `snap` as a frame whose
+    * columns are `lead` (resolved against the scan, e.g. `_metadata`
+    * fields) followed by the snapshot schema, in snapshot order. Old
+    * files missing an evolved column null-fill. Without deletion vectors
+    * it is one relation; with them, the clean files' scan ∪ (the DV
+    * files' scan − deleted positions), each branch an index that shares
+    * the pinned snapshot and keeps planning-time file pruning.
+    *
+    * The frame is always a projection over the relation, never the bare
+    * relation: the DML rule answers `count(*)` from the log only for a
+    * bare lake relation (`format("graft-lake")`), so a count over this
+    * frame scans the files. */
+  private[graft] def scan(spark: SparkSession, snap: GraftLake.Snapshot,
+      files: Seq[GraftLake.AddFile], lead: Seq[Column] = Nil): DataFrame = {
+    val served = snap.copy(files = files)
+    val cols = lead ++ snap.schema.fieldNames.map(col)
+    def frame(dvSubset: Option[Boolean]): DataFrame =
+      spark.baseRelationToDataFrame(relationFor(spark,
+        new LakeFileIndex(spark, snap.dir, None, Some(served), dvSubset)))
+    if (!files.exists(_.dv.isDefined)) frame(None).select(cols: _*)
+    else frame(Some(false)).select(cols: _*)
+      .union(frame(Some(true)).where(!GraftLake.dvDeletedCol()).select(cols: _*))
   }
 }

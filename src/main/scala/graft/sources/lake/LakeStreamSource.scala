@@ -162,9 +162,7 @@ final class LakeStreamSource(spark: SparkSession, dir: String,
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned.schema)
           else
-            GraftLake.readFiles(spark,
-              pinned.copy(version = to, files = snapTo.files),
-              snapTo.activePaths)
+            LakeFileIndex.scan(spark, pinned, snapTo.files)
         if (readChangeFeed) snap0.withColumn("change_kind", lit("insert"))
         else snap0
       case Some(from) if readChangeFeed =>
@@ -202,9 +200,7 @@ final class LakeStreamSource(spark: SparkSession, dir: String,
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned.schema)
         else
-          GraftLake.readFiles(spark,
-            pinned.copy(version = to, files = adds),
-            adds.map(a => GraftLake.absPath(dir, a.path)))
+          LakeFileIndex.scan(spark, pinned, adds)
     }
     GraftDatasetBridge.asStreaming(df)
   }

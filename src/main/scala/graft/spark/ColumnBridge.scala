@@ -66,6 +66,11 @@ object GraftDatasetBridge {
   }
 }
 
+/** Access bridge for `StructType.asNullable` (`private[spark]`). */
+object GraftSchemaBridge {
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+}
+
 /** Access bridge for the `private[sql]` schema checks Spark's file-source
   * write path runs before it writes a row (`DataSource.planForWriting`,
   * `InsertIntoHadoopFsRelationCommand`, `FileFormatWriter`). The lake

@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
  * Catalyst integration point: registers the engine's native expressions as
  * SQL functions via `SparkSessionExtensions` — the public Spark extension
  * API (enable with
- * `.config("spark.sql.extensions", "graft.spark.GraftExtensions")`, or
- * `GraftExtensions.registerAll(spark)` on a live session). Pure-SQL users
+ * `.config("spark.sql.extensions", "graft.spark.GraftExtensions")`, which
+ * every session built by [[graft.GraftSession]] sets). Pure-SQL users
  * then get the engine's sketch/fingerprint kit with full codegen:
  *
  *   SELECT graft_fingerprint32(text),
@@ -34,10 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => MvRewriteRule)
     ext.injectPlannerStrategy(_ => FooterCountStrategy)
     // SQL DML (INSERT/UPDATE/DELETE/MERGE) over graft-lake catalog
-    // tables: the rule that keeps them on the transaction log. Resolution
-    // rules can only be injected at session build (no registerAll
-    // equivalent), so lake SQL DML REQUIRES the spark.sql.extensions
-    // config.
+    // tables: the rule that keeps them on the transaction log
     ext.injectPostHocResolutionRule(_ => LakeDmlRule)
     // maintenance grammar (VACUUM / OPTIMIZE [ZORDER BY] / RESTORE /
     // DESCRIBE HISTORY) — statements vanilla Spark SQL cannot parse
@@ -211,25 +208,4 @@ object GraftExtensions {
       graft.sources.lake.GraftLake.changes(spark, dir, from - 1, end)
         .queryExecution.logical
     }
-
-  /** Register into a live session's function registry (tests, notebooks —
-    * no session restart needed).
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (name, usage, builder) =>
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-        builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(RangeJoinChunkRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinChunkRule
-    if (!spark.experimental.extraOptimizations.contains(MvRewriteRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewriteRule
-    if (!spark.experimental.extraStrategies.contains(FooterCountStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ FooterCountStrategy
-  }
 }

@@ -228,7 +228,7 @@ object LakeDmlRule extends Rule[LogicalPlan] {
   private def dvPlan(spark: SparkSession, idx: LakeFileIndex,
       wanted: Seq[AttributeReference],
       ct: Option[CatalogTable]): LogicalPlan = {
-    val inner0 = LakeFileIndex.dvSplitFrame(spark, idx)
+    val inner0 = LakeFileIndex.scan(spark, idx.snap, idx.snap.files)
       .queryExecution.analyzed
     val inner = ct match {
       case Some(c) => inner0.transform {

@@ -37,8 +37,7 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, S
  * equality (hash join handles those, and this also makes the rewrite
  * self-terminating: the rewritten join contains `chunkL = chunkR`).
  *
- * Enable with `spark.sql.extensions=graft.spark.GraftExtensions` or
- * [[GraftExtensions.registerAll]] on a live session.
+ * Enable with `spark.sql.extensions=graft.spark.GraftExtensions`.
  */
 object RangeJoinChunkRule extends Rule[LogicalPlan] with PredicateHelper {
 

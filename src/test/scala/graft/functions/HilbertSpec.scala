@@ -44,14 +44,7 @@ class HilbertSpec extends SparkSpec {
     assert(HilbertIndex2.compute(5 + (1L << 16), 9, 16) ==
       HilbertIndex2.compute(5, 9, 16))
     // SQL surface
-    GraftExtensions2Check.register(spark)
     val viaSql = spark.sql("SELECT graft_hilbert2(3L, 3L, 2)").collect()(0).getLong(0)
     assert(viaSql == 10L)
   }
-}
-
-/** registerAll is idempotent; tiny helper keeps the spec readable. */
-private object GraftExtensions2Check {
-  def register(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.spark.GraftExtensions.registerAll(s)
 }

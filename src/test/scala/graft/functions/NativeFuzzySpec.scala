@@ -76,7 +76,6 @@ class NativeFuzzySpec extends SparkSpec {
   }
 
   test("SQL registration: graft_jaro_winkler / graft_damerau_levenshtein") {
-    graft.spark.GraftExtensions.registerAll(spark)
     val (jw, dl) = spark.sql(
       "SELECT graft_jaro_winkler('martha', 'marhta'), " +
         "graft_damerau_levenshtein('CA', 'ABC')")

@@ -226,14 +226,14 @@ class LakeSpec extends SparkSpec {
   test("registerView: SQL reads a pinned snapshot; re-register advances") {
     val dir = tmp()
     GraftLake.create(kv(0 until 50, "a"), dir, numFiles = 2)
-    GraftLake.registerView(spark, dir, "lake_sql_t")
+    GraftLake.read(spark, dir).createOrReplaceTempView("lake_sql_t")
     assert(spark.sql("SELECT count(*) AS n FROM lake_sql_t").head().getLong(0) == 50)
     GraftLake.delete(spark, dir, col("id") < 10L)
     // the view captured v0's file set — snapshot isolation under writers
     assert(spark.sql("SELECT count(*) AS n FROM lake_sql_t").head().getLong(0) == 50)
-    GraftLake.registerView(spark, dir, "lake_sql_t")
+    GraftLake.read(spark, dir).createOrReplaceTempView("lake_sql_t")
     assert(spark.sql("SELECT count(*) AS n FROM lake_sql_t").head().getLong(0) == 40)
-    GraftLake.registerView(spark, dir, "lake_sql_v0", asOf = Some(0L))
+    GraftLake.read(spark, dir, asOf = Some(0L)).createOrReplaceTempView("lake_sql_v0")
     assert(spark.sql(
       "SELECT count(*) AS n FROM lake_sql_v0 WHERE id < 10").head().getLong(0) == 10)
   }

@@ -66,7 +66,7 @@ class LakeColumnMappingSpec extends SparkSpec {
     assert(all.count() == 1100L)
     assert(all.where(col("doc_id") === 1050L).count() == 1L)
     // planner-integrated path too (pushdown travels logical → physical)
-    val pruned = LakeFileIndex.readPruned(spark, dir)
+    val pruned = GraftLake.read(spark, dir)
       .where(col("doc_id") >= 100L && col("doc_id") < 200L)
     assert(pruned.count() == 100L)
     // time travel to the pre-rename version shows the OLD name

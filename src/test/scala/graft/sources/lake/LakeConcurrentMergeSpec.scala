@@ -116,7 +116,7 @@ class LakeConcurrentMergeSpec extends SparkSpec {
     assert(got == expected,
       "concurrent MoR deletes/update + append must serialize to the combined effect")
     // the metadata count agrees with a real scan after the race
-    val metaCnt = LakeFileIndex.readPruned(spark, dir).groupBy().count().head().getLong(0)
+    val metaCnt = spark.read.format("graft-lake").load(dir).groupBy().count().head().getLong(0)
     assert(metaCnt == expected.size.toLong,
       s"log-metadata count $metaCnt != ${expected.size} after racing MoR commits")
     // and the change feed over the whole race nets exactly the dead rows

@@ -2,6 +2,8 @@ package graft.sources.lake
 
 import java.io.File
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -377,6 +379,37 @@ class LakeDvSpec extends SparkSpec {
     spark.sql("DROP TABLE lake_dv_leak")
   }
 
+  test("MoR MERGE INTO logs no LogicalRDD output-column warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = tmp()
+    mkTable(dir, n = 200, files = 2)
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("lake-dv-logical-rdd", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.LogicalRDD")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try GraftLake.mergeIntoMoR(spark, dir,
+      spark.range(0, 400, 5).select(col("id"), (col("id") * 3).as("sv")),
+      col("t.id") === col("s.id"),
+      matched = Seq(
+        GraftLake.MatchedUpdate(Some(col("s.id") % 2 === 0), Seq("v" -> lit(7L))),
+        GraftLake.MatchedDelete()),
+      notMatched = Seq(GraftLake.NotMatchedInsert(Some(col("s.sv") % 2 === 1),
+        Seq("id" -> col("s.id"), "v" -> lit(9L)))))
+    finally { logger.removeAppender(appender); appender.stop() }
+    assert(GraftLake.history(dir).last._2 == "merge-mor")
+    assert(GraftLake.read(spark, dir).count() == 200L)
+    assert(warns.isEmpty, s"LogicalRDD warned: ${warns.asScala.headOption.getOrElse("")}")
+  }
+
   test("merge over a DV'd table: victims re-read without deleted rows; " +
     "upsert of a deleted key re-inserts it") {
     val dir = tmp()
@@ -400,7 +433,7 @@ class LakeDvSpec extends SparkSpec {
 
     // the plan's DvDeleted reference object is CONSTANT size — no map of
     // the table's files (the r12 shape measured 126 MB at 1e6 DV files)
-    val frame = LakeFileIndex.readPruned(spark, dir)
+    val frame = GraftLake.read(spark, dir)
     val exprs = frame.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FilterExec =>
         f.condition.collect { case d: DvDeleted => d }
@@ -424,8 +457,11 @@ class LakeDvSpec extends SparkSpec {
     // per-file metadata: the DV branch's listing carries a sidecar path
     // per DV'd file; the clean branch's listing carries none. This is
     // exactly what a task's split inherits — its own files' descriptors.
-    val idx = new LakeFileIndex(spark, dir, None)
-    val (cleanIdx, dvdIdx) = LakeFileIndex.dvSplit(spark, idx)
+    val Seq(cleanIdx, dvdIdx) = frame.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources
+          .HadoopFsRelation].location.asInstanceOf[LakeFileIndex]
+    }
     val dvdMeta = dvdIdx.listFiles(Nil, Nil).head.files
       .map(_.metadata.get(GraftParquetFileFormat.DvPathField))
     assert(dvdMeta.nonEmpty && dvdMeta.forall(_.isDefined))

@@ -48,7 +48,7 @@ class LakeEvolutionSpec extends SparkSpec {
     assert(df.select("doc_id").as[Long].collect().toSet == (100L to 149L).toSet)
 
     // planner path too: LakeFileIndex scan prunes and resolves by id
-    val planned = LakeFileIndex.readPruned(spark, dir)
+    val planned = GraftLake.read(spark, dir)
       .filter(col("doc_id") >= 100L && col("doc_id") <= 149L)
     assert(planned.collect().map(_.getLong(0)).toSet == (100L to 149L).toSet)
     assert(scanOf(planned).metrics("numFiles").value < 8)

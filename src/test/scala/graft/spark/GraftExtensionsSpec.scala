@@ -6,8 +6,6 @@ import graft.functions.{Fingerprint32, SimHash64}
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.registerAll(spark)
-
   test("SQL functions agree with the native implementations") {
     val row = spark.sql(
       """SELECT graft_fingerprint32('hello world') AS fp,

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 class MvRewriteRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.registerAll(spark)
-
   private lazy val (factDir, mvDir): (String, String) = {
     val f = java.nio.file.Files.createTempDirectory("mv_fact").toString
     val m = java.nio.file.Files.createTempDirectory("mv_mv").toString

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 class RangeJoinRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  GraftExtensions.registerAll(spark)
-
   private def withChunk[T](width: Long)(f: => T): T = {
     spark.conf.set(RangeJoinChunkRule.ConfKey, width.toString)
     try f finally spark.conf.unset(RangeJoinChunkRule.ConfKey)
