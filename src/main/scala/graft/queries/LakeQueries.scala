@@ -4,6 +4,7 @@ import graft.functions.Kit
 import graft.sources.Tables
 import graft.sources.lake.GraftLake
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /**
@@ -126,7 +127,7 @@ object LakeQueries {
     val p = ordersProjected(s, dir)
     GraftLake.create(p.repartitionByRange(8, col("o_orderkey")), tbl)
     val (df, scanned, total) =
-      GraftLake.scanRange(s, tbl, "o_orderkey", 1000L, 2999L)
+      GraftLake.scanFiltered(s, tbl, col("o_orderkey").between(1000L, 2999L))
     df.select(col("o_orderkey"), col("price_c"),
         lit(scanned < total).as("pruned"))
       .orderBy(col("o_orderkey"))
@@ -277,7 +278,8 @@ object LakeQueries {
     GraftLake.create(p.repartitionByRange(8, col("o_orderkey")), tbl)
     GraftLake.renameColumn(s, tbl, "o_orderkey", "order_id")
     GraftLake.dropColumn(s, tbl, "o_orderpriority")
-    val (df, scanned, total) = GraftLake.scanRange(s, tbl, "order_id", 1000L, 2999L)
+    val (df, scanned, total) =
+      GraftLake.scanFiltered(s, tbl, col("order_id").between(1000L, 2999L))
     df.select(col("order_id"), col("o_orderstatus"), col("price_c"),
         lit(scanned < total).as("pruned"))
       .orderBy(col("order_id"))
@@ -702,7 +704,7 @@ object LakeQueries {
     // metadata-only count: exact under DVs, zero scans
     val cnt = s.read.format("graft-lake").load(tbl)
       .groupBy().count()
-    val scans = cnt.queryExecution.executedPlan.collect {
+    val scans = new AdaptiveSparkPlanHelper {}.collect(cnt.queryExecution.executedPlan) {
       case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
     }
     require(scans.isEmpty, "count(*) must fold to log metadata, no scan")

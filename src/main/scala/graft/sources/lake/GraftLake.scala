@@ -7,10 +7,13 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.DefaultPrettyPrinter
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.node.ArrayNode
 import graft.spark.LocalCheckpoint
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -50,8 +53,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
  * Per-file column stats (min/max/nullCount) come from the parquet
  * FOOTERS — the task that writes a file reads its own footer before it
  * returns ([[DataFileWriter]]), so there is no data scan and no
- * driver-side read — and drive file pruning in [[scanRange]] and in every
- * planned read ([[LakeFileIndex]]):
+ * driver-side read — and drive file pruning through one pruner,
+ * [[overlappingResolved]], behind every planned read ([[LakeFileIndex]]),
+ * [[scanFiltered]], DML victim selection and [[merge]]'s candidates:
  * at 100 TB the log + stats are the KB-sized planning object and a
  * selective range scan opens only the overlapping files.
  *
@@ -170,27 +174,31 @@ object GraftLake {
 
   // ── commit (de)serialization ─────────────────────────────────────────
 
-  private def colStatsNode(s: ColStats): ObjectNode = {
-    val n = mapper.createObjectNode()
-    s.min.foreach(n.put("min", _))
-    s.max.foreach(n.put("max", _))
-    n.put("nulls", s.nullCount)
-    n.put("kind", s.kind)
-    n
-  }
-
-  private def addFileNode(into: ArrayNode, a: AddFile): Unit = {
-    val an = into.addObject()
-    an.put("path", a.path); an.put("rows", a.rows); an.put("bytes", a.bytes)
+  /** One AddFile as a JSON object, the shape [[parseAddFile]] reads —
+    * written by both commits and checkpoints. */
+  private def writeAddFile(g: JsonGenerator, a: AddFile): Unit = {
+    g.writeStartObject()
+    g.writeStringField("path", a.path)
+    g.writeNumberField("rows", a.rows)
+    g.writeNumberField("bytes", a.bytes)
     a.dv.foreach { d =>
-      val dn = an.putObject("dv")
-      dn.put("path", d.path); dn.put("card", d.cardinality)
+      g.writeObjectFieldStart("dv")
+      g.writeStringField("path", d.path)
+      g.writeNumberField("card", d.cardinality)
+      g.writeEndObject()
     }
-    a.cluster.foreach(an.put("cluster", _))
-    val sn = an.putObject("stats")
-    a.stats.foreach { case (col, st) =>
-      sn.set[com.fasterxml.jackson.databind.JsonNode](col, colStatsNode(st)); ()
+    a.cluster.foreach(g.writeStringField("cluster", _))
+    g.writeObjectFieldStart("stats")
+    a.stats.foreach { case (c, st) =>
+      g.writeObjectFieldStart(c)
+      st.min.foreach(g.writeStringField("min", _))
+      st.max.foreach(g.writeStringField("max", _))
+      g.writeNumberField("nulls", st.nullCount)
+      g.writeStringField("kind", st.kind)
+      g.writeEndObject()
     }
+    g.writeEndObject()
+    g.writeEndObject()
   }
 
   private def parseAddFile(an: com.fasterxml.jackson.databind.JsonNode): AddFile = {
@@ -213,40 +221,53 @@ object GraftLake {
   private def parseAddFiles(arr: com.fasterxml.jackson.databind.JsonNode): Seq[AddFile] =
     arr.asInstanceOf[ArrayNode].elements().asScala.map(parseAddFile).toSeq
 
-  private def commitJson(c: Commit): String = {
-    val n = mapper.createObjectNode()
-    n.put("version", c.version)
-    n.put("ts", c.ts)
-    n.put("op", c.op)
-    c.txnApp.foreach(n.put("txnApp", _))
-    c.txnEpoch.foreach(e => n.put("txnEpoch", e))
-    c.schemaJson.foreach(n.put("schema", _))
-    c.ckptEvery.foreach(n.put("ckptEvery", _))
-    c.maxColId.foreach(n.put("maxColId", _))
-    if (c.retiredNames.nonEmpty) {
-      val rn = n.putObject("retired")
-      c.retiredNames.foreach { case (name, id) => rn.put(name, id) }
-    }
-    if (c.props.nonEmpty) {
-      val pn = n.putObject("props")
-      c.props.foreach {
-        case (k, Some(v)) => pn.put(k, v)
-        case (k, None) => pn.putNull(k)
+  /** One commit, pretty-printed: Jackson's default pretty printer, the
+    * layout every commit in the log has been written in. */
+  private[lake] def commitJson(c: Commit): String = {
+    val out = new java.io.StringWriter
+    val g = mapper.getFactory.createGenerator(out)
+    g.setPrettyPrinter(new DefaultPrettyPrinter)
+    try {
+      g.writeStartObject()
+      g.writeNumberField("version", c.version)
+      g.writeNumberField("ts", c.ts)
+      g.writeStringField("op", c.op)
+      c.txnApp.foreach(g.writeStringField("txnApp", _))
+      c.txnEpoch.foreach(g.writeNumberField("txnEpoch", _))
+      c.schemaJson.foreach(g.writeStringField("schema", _))
+      c.ckptEvery.foreach(g.writeNumberField("ckptEvery", _))
+      c.maxColId.foreach(g.writeNumberField("maxColId", _))
+      if (c.retiredNames.nonEmpty) {
+        g.writeObjectFieldStart("retired")
+        c.retiredNames.foreach { case (name, id) => g.writeNumberField(name, id) }
+        g.writeEndObject()
       }
-    }
-    c.clusterBounds.foreach(n.put("clusterBounds", _))
-    if (c.features.nonEmpty) {
-      val fn = n.putArray("features")
-      c.features.foreach(fn.add)
-    }
-    val adds = n.putArray("adds")
-    c.adds.foreach(addFileNode(adds, _))
-    val rem = n.putArray("removes")
-    c.removes.foreach(rem.add)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+      if (c.props.nonEmpty) {
+        g.writeObjectFieldStart("props")
+        c.props.foreach {
+          case (k, Some(v)) => g.writeStringField(k, v)
+          case (k, None) => g.writeNullField(k)
+        }
+        g.writeEndObject()
+      }
+      c.clusterBounds.foreach(g.writeStringField("clusterBounds", _))
+      if (c.features.nonEmpty) {
+        g.writeArrayFieldStart("features")
+        c.features.foreach(g.writeString)
+        g.writeEndArray()
+      }
+      g.writeArrayFieldStart("adds")
+      c.adds.foreach(writeAddFile(g, _))
+      g.writeEndArray()
+      g.writeArrayFieldStart("removes")
+      c.removes.foreach(g.writeString)
+      g.writeEndArray()
+      g.writeEndObject()
+    } finally g.close()
+    out.toString
   }
 
-  private def parseCommit(f: File): Commit = {
+  private[lake] def parseCommit(f: File): Commit = {
     val n = mapper.readTree(f)
     def optStr(k: String) = Option(n.get(k)).map(_.asText)
     val removes = n.get("removes").asInstanceOf[ArrayNode]
@@ -304,30 +325,7 @@ object GraftLake {
       s.txns.foreach { case (app, epoch) => g.writeNumberField(app, epoch) }
       g.writeEndObject()
       g.writeArrayFieldStart("files")
-      s.files.values.foreach { a =>
-        g.writeStartObject()
-        g.writeStringField("path", a.path)
-        g.writeNumberField("rows", a.rows)
-        g.writeNumberField("bytes", a.bytes)
-        a.dv.foreach { d =>
-          g.writeObjectFieldStart("dv")
-          g.writeStringField("path", d.path)
-          g.writeNumberField("card", d.cardinality)
-          g.writeEndObject()
-        }
-        a.cluster.foreach(g.writeStringField("cluster", _))
-        g.writeObjectFieldStart("stats")
-        a.stats.foreach { case (c, st) =>
-          g.writeObjectFieldStart(c)
-          st.min.foreach(g.writeStringField("min", _))
-          st.max.foreach(g.writeStringField("max", _))
-          g.writeNumberField("nulls", st.nullCount)
-          g.writeStringField("kind", st.kind)
-          g.writeEndObject()
-        }
-        g.writeEndObject()
-        g.writeEndObject()
-      }
+      s.files.values.foreach(writeAddFile(g, _))
       g.writeEndArray()
       g.writeEndObject()
     } finally g.close()
@@ -645,7 +643,8 @@ object GraftLake {
     * UTF-16 but their code points sort above) — comparing footer bounds in
     * the wrong collation silently wrong-prunes files. Spark's own string
     * min/max aggregate in UTF8String (binary) order, so this also keeps
-    * [[merge]]'s update-key bounds consistent with file stats. */
+    * a merge source's key bounds (the `BETWEEN` that [[merge]] and
+    * MERGE INTO prune with) consistent with file stats. */
   private def utf8Cmp(a: String, b: String): Int = {
     val x = a.getBytes(StandardCharsets.UTF_8)
     val y = b.getBytes(StandardCharsets.UTF_8)
@@ -660,9 +659,9 @@ object GraftLake {
   }
 
   /** Pruning must FAIL OPEN: a value that doesn't parse against the
-    * stats kind (e.g. a Date rendered "2020-01-01" vs "long" stats)
-    * yields None and the caller keeps the file — never throws, never
-    * wrongly prunes. */
+    * stats kind (e.g. a `decimal(12,2)` bound "1.50" vs unscaled INT64
+    * "long" stats) yields None and the caller keeps the file — never
+    * throws, never wrongly prunes. */
   private def cmpOpt(kind: String, a: String, b: String): Option[Int] =
     try Some(cmp(kind, a, b)) catch { case _: NumberFormatException => None }
 
@@ -1405,18 +1404,17 @@ object GraftLake {
 
   /** Copy-on-write MERGE (upsert by `key`): files possibly holding an
     * update key are rewritten with matched rows replaced; all update rows
-    * (matched + new) are written once. Conservative stats pruning keeps
-    * the candidate set sound: a key outside the candidates cannot exist
-    * in the table. */
+    * (matched + new) are written once. The candidates are the files
+    * [[keyCandidates]] keeps for the updates' key range, so a key outside
+    * them cannot exist in the table. */
   def merge(spark: SparkSession, dir: String, updates: DataFrame,
       key: String): Long = {
     val upd = updates.cache()
     try {
-      val (lo, hi, n, nKeys, nNullKeys) = {
+      val (bounds, n, nKeys, nNullKeys) = {
         val r = upd.agg(min(col(key)), max(col(key)), count(lit(1)),
           count_distinct(col(key)), count(when(col(key).isNull, 1))).collect()(0)
-        (Option(r.get(0)), Option(r.get(1)), r.getLong(2), r.getLong(3),
-          r.getLong(4))
+        (r, r.getLong(2), r.getLong(3), r.getLong(4))
       }
       if (n == 0) return latestVersion(dir)
       // NULL merge keys have no defined match semantics (SQL equality
@@ -1434,7 +1432,7 @@ object GraftLake {
       require(nKeys == n,
         s"merge updates contain duplicate '$key' values ($n rows, $nKeys keys)")
       fence(dir, "merge") { snap =>
-        val candidates = rangeCandidates(snap.files, statsKey(snap.schema, key), lo, hi)
+        val candidates = keyCandidates(snap, col(key), bounds)
         val base =
           if (candidates.isEmpty) emptyDf(spark, snap.schema)
           else LakeFileIndex.scan(spark, snap, candidates)
@@ -1446,30 +1444,18 @@ object GraftLake {
     } finally { upd.unpersist(); () }
   }
 
-  /** Files whose footer stats under `key` cannot rule out a value in
-    * [lo, hi] — the stats prune of [[scanRange]], [[merge]] and the MERGE
-    * INTO planner. Conservative: a file without stats, a bound that does
-    * not parse against the stats kind, or an unknown range (an empty or
-    * all-null merge source) keeps the file; a file without bounds is
-    * skipped only when it is provably all-null, since null matches no
-    * range and no key. */
-  private def rangeCandidates(files: Seq[AddFile], key: String,
-      lo: Option[Any], hi: Option[Any]): Seq[AddFile] =
-    (lo, hi) match {
-      case (Some(l), Some(h)) =>
-        files.filter { f =>
-          f.stats.get(key) match {
-            case Some(st) if st.min.isEmpty || st.max.isEmpty =>
-              !(st.nullCount >= 0 && st.nullCount == f.rows)
-            case Some(st) =>
-              (for {
-                c1 <- cmpOpt(st.kind, st.max.get, l.toString)
-                c2 <- cmpOpt(st.kind, st.min.get, h.toString)
-              } yield c1 >= 0 && c2 <= 0).getOrElse(true)
-            case None => true
-          }
-        }
-      case _ => files
+  /** Files that may hold a `key` value between a merge source's min and
+    * max, the first two columns of `bounds` (a collected aggregate row):
+    * [[overlapping]] on `key BETWEEN min AND max`, with the bounds typed as
+    * the source key. An unknown bound (an empty or all-null source) keeps
+    * every file. */
+  private def keyCandidates(snap: Snapshot, key: Column, bounds: Row): Seq[AddFile] =
+    if (bounds.isNullAt(0) || bounds.isNullAt(1)) snap.files
+    else {
+      def bound(i: Int): Column = org.apache.spark.sql.GraftColumnBridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          bounds.get(i), bounds.schema(i).dataType))
+      overlapping(snap, key.between(bound(0), bound(1)))
     }
 
   // ── general MERGE INTO (SQL MERGE semantics) ─────────────────────────
@@ -1708,19 +1694,16 @@ object GraftLake {
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE INTO needs at least one WHEN clause")
     val src = source.cache()
-    // one agg per distinct equi source column across fence retries:
+    // one agg row per distinct equi source column across fence retries:
     // (min, max, rows, distinct keys) — bounds drive the stats prune,
     // rows==distinct proves each target row can match at most ONE source
     // row (extra conjuncts only ever REMOVE matches), which lets the
     // ambiguity window — a whole extra shuffle of victims × source — be
     // skipped in the dominant unique-key-merge case
-    val srcAgg = scala.collection.mutable.Map.empty[String, (Option[Any], Option[Any], Long, Long)]
-    def aggOf(sCol: String): (Option[Any], Option[Any], Long, Long) =
-      srcAgg.getOrElseUpdate(sCol, {
-        val r = src.agg(min(col(sCol)), max(col(sCol)), count(lit(1)),
-          count_distinct(col(sCol))).collect()(0)
-        (Option(r.get(0)), Option(r.get(1)), r.getLong(2), r.getLong(3))
-      })
+    val srcAgg = scala.collection.mutable.Map.empty[String, Row]
+    def aggOf(sCol: String): Row =
+      srcAgg.getOrElseUpdate(sCol, src.agg(min(col(sCol)), max(col(sCol)),
+        count(lit(1)), count_distinct(col(sCol))).collect()(0))
     try fence(dir, op) { snap =>
       attempt(new MergePlan(spark, snap, src, condition, aggOf, matched,
         notMatched, notMatchedBySource, newColumns))
@@ -1736,7 +1719,7 @@ object GraftLake {
     * positions into DVs and stages only the changed rows. */
   private final class MergePlan(spark: SparkSession, val snap: Snapshot,
       val src: DataFrame, condition: Column,
-      aggOf: String => (Option[Any], Option[Any], Long, Long),
+      aggOf: String => Row,
       matched: Seq[MatchedClause], notMatched: Seq[NotMatchedInsert],
       notMatchedBySource: Seq[MatchedClause], newColumns: Seq[StructField]) {
     // schema evolution, recomputed under the fence each attempt (a
@@ -1756,13 +1739,12 @@ object GraftLake {
 
     private val equi = mergeEquiCol(spark, snapE, src, condition)
 
-    /** Files that MAY hold a source-matched row per the first
-      * equi-conjunct's source bounds (conservative — a key outside the
-      * candidates provably isn't in the table). */
+    /** Files that MAY hold a source-matched row: [[keyCandidates]] for
+      * the first equi-conjunct's target column and source bounds (a key
+      * outside the candidates provably isn't in the table). */
     val cand: Seq[AddFile] = equi match {
       case Some((tCol, sCol)) =>
-        val (lo, hi, _, _) = aggOf(sCol)
-        rangeCandidates(snap.files, statsKey(evolved, tCol), lo, hi)
+        keyCandidates(snapE, col(QuotingUtils.quoteIdentifier(tCol)), aggOf(sCol))
       case None => snap.files
     }
 
@@ -1804,7 +1786,7 @@ object GraftLake {
       val s = src.withColumn("__gl_sid", monotonically_increasing_id()).alias("s")
       val j = t.join(s, condition, "full_outer")
       val uniqueMatch = equi.exists { case (_, sCol) =>
-        val (_, _, n, d) = aggOf(sCol); n == d
+        val r = aggOf(sCol); r.getLong(2) == r.getLong(3)
       }
       if (matched.isEmpty || uniqueMatch) j
       else {
@@ -2652,25 +2634,12 @@ object GraftLake {
     else LakeFileIndex.scan(spark, snap, snap.files)
   }
 
-  /** Range scan with file-level stats pruning: returns the filtered
-    * DataFrame plus (filesScanned, filesTotal). The residual filter keeps
-    * the result exact; pruning only skips files whose footer bounds prove
-    * no row can match. */
-  def scanRange(spark: SparkSession, dir: String, column: String,
-      lo: Any, hi: Any): (DataFrame, Int, Int) = {
-    val snap = snapshot(spark, dir)
-    val hit = rangeCandidates(snap.files, statsKey(snap.schema, column), Some(lo), Some(hi))
-    val df =
-      if (hit.isEmpty) emptyDf(spark, snap.schema)
-      else LakeFileIndex.scan(spark, snap, hit)
-    (df.filter(col(column) >= lit(lo) && col(column) <= lit(hi)),
-      hit.size, snap.files.size)
-  }
-
-  /** General pruned scan: every `col <op> literal` conjunct of the
-    * predicate prunes via footer stats (the same machinery CoW victim
-    * selection uses); the full predicate then runs as the residual
-    * filter, so the result is exact whatever the stats covered. */
+  /** Pruned scan: returns the filtered DataFrame plus (filesScanned,
+    * filesTotal). The files are those [[overlapping]] keeps — the lake's
+    * one pruner, which planned reads, DML victim selection and [[merge]]
+    * use too — so a range scan is `scanFiltered(spark, dir,
+    * col(c).between(lo, hi))`. The full predicate then runs as the
+    * residual filter, so the result is exact whatever the stats covered. */
   def scanFiltered(spark: SparkSession, dir: String,
       predicate: Column): (DataFrame, Int, Int) = {
     val snap = snapshot(spark, dir)
@@ -2972,9 +2941,11 @@ object GraftLake {
         b.removes.forall(!victimPaths.contains(_)) &&
         b.adds.forall(a => !victimPaths.contains(a.path)))
 
-  /** Files whose stats cannot DISPROVE the predicate. Simple
-    * `col <op> literal` conjuncts, `IN` lists, and null checks prune;
-    * anything else keeps the file (conservative, never wrong).
+  /** Files whose stats cannot DISPROVE the predicate — the lake's one
+    * file pruner ([[overlappingResolved]]) on a `Column` analyzed against
+    * the table schema. Simple `col <op> literal` conjuncts, `IN` lists,
+    * and null checks prune; anything else keeps the file (conservative,
+    * never wrong).
     *
     * Partitioning posture: there is deliberately NO hive-style partition
     * scheme here — clustering (repartitionByRange / [[optimizeZOrder]])
@@ -3003,9 +2974,12 @@ object GraftLake {
       conjunctsIn: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[AddFile] = {
     import org.apache.spark.sql.catalyst.expressions._
     // range check against one file's footer stats; absent stats → may match
-    // (stats are keyed by FIELD ID, so a renamed column keeps pruning)
+    // (stats are keyed by FIELD ID, so a renamed column keeps pruning); a
+    // provably all-NULL column matches no comparison, since NULL satisfies
+    // neither side of one
     def rangeMayMatch(f: AddFile, name: String, op: String, v: String): Boolean =
       f.stats.get(statsKey(snap.schema, name)) match {
+        case Some(st) if op != "?" && st.nullCount == f.rows => false
         case Some(st) if st.min.isDefined && st.max.isDefined =>
           val k = st.kind
           (op match {
@@ -3021,16 +2995,19 @@ object GraftLake {
       }
     def attrName(e: Expression): Option[String] = e match {
       case a: Attribute => Some(a.name)
-      case UnresolvedAttributeLike(n) => Some(n)
       case _ => None
     }
     // a comparison side counts as a constant if it FOLDS to a non-null
     // value, not just if it is a bare Literal: analyzed API predicates
     // carry implicit casts (`col("id") < 200` analyzes to
     // `id < cast(200 as bigint)`), which a Literal-only match would
-    // silently demote to keep-all — evaluate instead
+    // silently demote to keep-all — evaluate instead. A BINARY constant
+    // stays opaque: a byte array renders as "[B@…", not as the UTF-8 text
+    // the footer's "string" bounds hold
     def constVal(e: Expression): Option[Any] =
-      if (e.foldable) Option(e.eval()) else None
+      if (e.foldable && e.dataType != org.apache.spark.sql.types.BinaryType)
+        Option(e.eval())
+      else None
     // one prunable conjunct → a may-match test per file; None = opaque
     // conjunct, prunes nothing (conservative)
     def mayMatch(e: Expression): Option[AddFile => Boolean] = e match {
@@ -3065,15 +3042,6 @@ object GraftLake {
     }
     val preds = conjunctsIn.flatMap(conjuncts).flatMap(mayMatch)
     snap.files.filter(f => preds.forall(_(f)))
-  }
-
-  private object UnresolvedAttributeLike {
-    def unapply(e: org.apache.spark.sql.catalyst.expressions.Expression): Option[String] =
-      e match {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          Some(u.nameParts.last)
-        case _ => None
-      }
   }
 
   private def opName(b: org.apache.spark.sql.catalyst.expressions.BinaryComparison): String =

@@ -221,6 +221,13 @@ object LakeDmlRule extends Rule[LogicalPlan] {
     Some(Histogram(total.toDouble / merged.size, bins.toArray))
   }
 
+  /** Marks [[dvPlan]]'s output with the snapshot it reads whole: a
+    * `format("graft-lake")` frame over a DV table is rewritten when
+    * `load()` analyzes it, so a later `count()` sees this plan, not the
+    * bare relation, and still folds to the log. */
+  private val DvScanOf =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[GraftLake.Snapshot]("graft.lake.dvScanOf")
+
   /** The DV split-scan plan re-pinned to `wanted` output attributes.
     * The inner relations carry `ct` so catalog machinery that walks the
     * resolved plan (e.g. `refreshTable`'s cache invalidation, which calls
@@ -248,9 +255,11 @@ object LakeDmlRule extends Rule[LogicalPlan] {
       inner.output.zip(wanted).forall { case (h, w) =>
         h.name.equalsIgnoreCase(w.name) },
       s"DV scan column mismatch: ${inner.output.map(_.name)} vs ${wanted.map(_.name)}")
-    Project(wanted.zip(inner.output).map { case (want, have) =>
+    val p = Project(wanted.zip(inner.output).map { case (want, have) =>
       Alias(have, want.name)(exprId = want.exprId, qualifier = want.qualifier)
     }, inner)
+    p.setTagValue(DvScanOf, idx.snap)
+    p
   }
 
   /** An all-files [[LakeFileIndex]] relation whose snapshot carries DVs —
@@ -330,7 +339,7 @@ object LakeDmlRule extends Rule[LogicalPlan] {
         }
       case DataSourceV2Relation(t: GraftLakeTable, _, _, _, _, _) =>
         Some(liveRows(GraftLake.snapshot(SparkSession.active, t.dir, t.asOf)))
-      case _ => None
+      case p => p.getTagValue(DvScanOf).map(liveRows)
     }
   private def liveRows(snap: GraftLake.Snapshot): Long =
     snap.files.map(f => f.rows - f.dv.map(_.cardinality).getOrElse(0L)).sum

@@ -185,7 +185,7 @@ class LakeSpec extends SparkSpec {
   test("stats pruning: range scan opens only overlapping files, result exact") {
     val dir = tmp()
     GraftLake.create(kv(0 until 1000, "a").repartitionByRange(8, col("id")), dir)
-    val (df, scanned, total) = GraftLake.scanRange(spark, dir, "id", 100L, 149L)
+    val (df, scanned, total) = GraftLake.scanFiltered(spark, dir, col("id").between(100L, 149L))
     assert(total == 8 && scanned < total, s"scanned $scanned of $total")
     assert(rowsOf(df) == rowsOf(kv(100 until 150, "a")))
     // string-kind stats prune too
@@ -193,7 +193,7 @@ class LakeSpec extends SparkSpec {
     GraftLake.create(
       kv(0 until 100, "a").withColumn("tag", concat(lit("k"), format_string("%03d", col("id"))))
         .repartitionByRange(4, col("tag")), dir2)
-    val (df2, s2, t2) = GraftLake.scanRange(spark, dir2, "tag", "k010", "k019")
+    val (df2, s2, t2) = GraftLake.scanFiltered(spark, dir2, col("tag").between("k010", "k019"))
     assert(t2 == 4 && s2 < t2)
     assert(df2.count() == 10)
     // IN-list pruning: values all in one file's range open only that file
@@ -206,18 +206,28 @@ class LakeSpec extends SparkSpec {
     assert(sNull == 0 && dfNull.count() == 0, "all-non-null stats prune IS NULL")
     val (_, sNotNull, tNotNull) = GraftLake.scanFiltered(spark, dir, col("id").isNotNull)
     assert(sNotNull == tNotNull, "IS NOT NULL keeps everything here")
-    // fail-open: a value that can't parse against the stats kind (Date
-    // renders "2020-01-05" vs INT32-days "long" stats) must not crash and
-    // must not wrongly prune — all files open, residual filter exact
+    // a Date bound evaluates to its day number, the INT32 "long" stats'
+    // unit: a range opens a strict subset of the files, rows exact
     val dirD = tmp()
     GraftLake.create(
       kv(0 until 20, "a").withColumn("d",
         date_add(lit(java.sql.Date.valueOf("2020-01-01")), col("id").cast("int")))
         .repartitionByRange(4, col("id")), dirD)
-    val (dfD, sD, tD) = GraftLake.scanRange(spark, dirD, "d",
-      java.sql.Date.valueOf("2020-01-05"), java.sql.Date.valueOf("2020-01-10"))
-    assert(sD == tD, "unparseable-vs-kind comparison fails OPEN")
-    assert(dfD.count() == 6, "residual filter still exact")
+    val (dfD, sD, tD) = GraftLake.scanFiltered(spark, dirD, col("d").between(
+      java.sql.Date.valueOf("2020-01-05"), java.sql.Date.valueOf("2020-01-10")))
+    assert(tD == 4 && sD < tD, s"Date range opened $sD/$tD")
+    assert(rowsBox2(dfD) == (4L to 9L).toSet, "residual filter still exact")
+    // fail-open: a value that can't parse against the stats kind (a
+    // decimal(12,2) bound "1.50" vs unscaled INT64 "long" stats) must not
+    // crash and must not wrongly prune — all files open, rows exact
+    val dirM = tmp()
+    GraftLake.create(
+      kv(0 until 20, "a").withColumn("m", (col("id") / 4).cast("decimal(12,2)"))
+        .repartitionByRange(4, col("id")), dirM)
+    val (dfM, sM, tM) = GraftLake.scanFiltered(spark, dirM,
+      col("m").between(BigDecimal("1.50"), BigDecimal("2.25")))
+    assert(tM == 4 && sM == tM, s"unparseable-vs-kind comparison fails OPEN: $sM/$tM")
+    assert(rowsBox2(dfM) == (6L to 9L).toSet, "residual filter still exact")
   }
 
   private def rowsBox2(df: DataFrame): Set[Long] =

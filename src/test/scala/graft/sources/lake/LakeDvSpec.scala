@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /**
@@ -275,11 +276,18 @@ class LakeDvSpec extends SparkSpec {
     val q = spark.sql("SELECT count(*) FROM lake_dv_cnt")
     assert(q.head().getLong(0) == 400L, "metadata count must subtract DVs")
     // plan proof: no scan at all — the aggregate folded to a local row
-    val scans = q.queryExecution.executedPlan.collect {
+    val scans = new AdaptiveSparkPlanHelper {}.collect(q.queryExecution.executedPlan) {
       case s: FileSourceScanExec => s
     }
     assert(scans.isEmpty, s"count(*) must not scan: ${q.queryExecution.executedPlan}")
 
+    // the DataFrame form too: load() rewrites the DV relation into its
+    // split scan before count() is applied, and that count still folds
+    val api = spark.read.format("graft-lake").load(dir).groupBy().count()
+    assert(api.head().getLong(0) == 400L)
+    assert(new AdaptiveSparkPlanHelper {}.collect(api.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }.isEmpty, s"a loaded DV table's count must not scan: ${api.queryExecution.executedPlan}")
     // filtered counts fall through to a real (DV-filtered) scan
     assert(spark.sql("SELECT count(*) FROM lake_dv_cnt WHERE id < 10")
       .head().getLong(0) == 8L)

@@ -43,7 +43,8 @@ class LakeEvolutionSpec extends SparkSpec {
 
     // footer pruning on the RENAMED column: stats were written under the
     // old name but are id-keyed, so a tight range still skips files
-    val (df, scanned, total) = GraftLake.scanRange(spark, dir, "doc_id", 100L, 149L)
+    val (df, scanned, total) =
+      GraftLake.scanFiltered(spark, dir, col("doc_id").between(100L, 149L))
     assert(total == 8 && scanned < total, s"opened $scanned/$total after rename")
     assert(df.select("doc_id").as[Long].collect().toSet == (100L to 149L).toSet)
 

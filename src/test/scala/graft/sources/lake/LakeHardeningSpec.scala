@@ -40,7 +40,8 @@ class LakeHardeningSpec extends SparkSpec {
     GraftLake.create(planeMix(), dir, numFiles = 1)
     // file min=U+E000, max=U+1F600; probing U+FFFD lies inside in
     // code-point order but OUTSIDE in UTF-16 order (max would look < lo)
-    val (df, scanned, total) = GraftLake.scanRange(spark, dir, "k", midChar, midChar)
+    val (df, scanned, total) =
+      GraftLake.scanFiltered(spark, dir, col("k").between(midChar, midChar))
     assert(total == 1 && scanned == 1, s"wrongly pruned: opened $scanned/$total")
     assert(df.select("id").as[Long].collect().toSeq == Seq(2L))
     // same collation through the Column-predicate path
@@ -58,7 +59,7 @@ class LakeHardeningSpec extends SparkSpec {
     GraftLake.append(Seq((10L, "zz1"), (11L, "zz2")).toDF("id", "k"), dir,
       numFiles = 1)
     // ASCII "a" < U+E000 and < "zz1" in UTF-8 order: both files disjoint
-    val (_, scanned, total) = GraftLake.scanRange(spark, dir, "k", "a", "a")
+    val (_, scanned, total) = GraftLake.scanFiltered(spark, dir, col("k").between("a", "a"))
     assert(total == 2 && scanned == 0, s"opened $scanned/$total for a miss")
   }
 
